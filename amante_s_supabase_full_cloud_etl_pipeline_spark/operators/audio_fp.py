@@ -79,7 +79,8 @@ from .cdc import (
     pairs_from_posting,
 )
 from .flac import decode_flac, sniff_flac
-from .multimodal import decode_wav
+from .fuse import BLOB_SCHEMA, Factory, MediaFamily, corpus_frame
+from .multimodal import AUDIO_CORPUS, decode_wav
 
 
 def decode_audio(blob: bytes, canonical_rate: int | None = None):
@@ -266,10 +267,7 @@ def audio_probes(
     — (doc_id, probe). The 33× expansion happens worker-side (never
     a Spark explode of a driver list), S4 skip as above.
     ``canonical_rate`` as on :func:`audio_fingerprints`."""
-
-    return media.filter(
-        F.col("doc_id").isNotNull() & F.col("blob").isNotNull()
-    ).mapInPandas(_probe_kernel(canonical_rate), AUDIO_PROBE_SCHEMA)
+    return AUDIO_PROBES.extract(media, canonical_rate)
 
 
 def _probe_kernel(canonical_rate):
@@ -294,20 +292,18 @@ def _probe_kernel(canonical_rate):
     return kernel
 
 
+AUDIO_PROBES = MediaFamily(
+    AUDIO_PROBE_SCHEMA, AUDIO_CORPUS, Factory(_probe_kernel)
+)
+
+
 def audio_probes_from_docs(
     docs: DataFrame, canonical_rate=None
 ) -> DataFrame:
     """WAV corpus synthesis + probe extraction in ONE Python hop
     (guide §4.1 via :mod:`.fuse`) — bit-identical rows to
     ``audio_probes(synthetic_audio_corpus(docs).select(...))``."""
-    from .fuse import fused_pandas
-    from .multimodal import _audio_corpus_kernel, _fan_out_ids
-
-    return fused_pandas(
-        _fan_out_ids(docs.filter(F.col("doc_id").isNotNull())),
-        (_audio_corpus_kernel, _probe_kernel(canonical_rate)),
-        AUDIO_PROBE_SCHEMA,
-    )
+    return AUDIO_PROBES.from_docs(docs, extract_args=(canonical_rate,))
 
 
 def shared_audio_pairs(
@@ -372,12 +368,6 @@ def synthetic_cross_rate_corpus(docs: DataFrame) -> DataFrame:
     must put all three rows of a group on the IDENTICAL probe-key
     set — which the golden leg pins value-exactly. Worker-side
     generation, same (doc_id, blob) contract as the other corpora."""
-    from pyspark.sql.types import (
-        BinaryType,
-        LongType,
-        StructField,
-        StructType,
-    )
 
     def kernel(batches):
         import numpy as np
@@ -409,10 +399,4 @@ def synthetic_cross_rate_corpus(docs: DataFrame) -> DataFrame:
                 {"doc_id": batch["doc_id"], "blob": blobs}
             )
 
-    schema = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("blob", BinaryType()),
-        ]
-    )
-    return docs.select("doc_id").mapInPandas(kernel, schema)
+    return corpus_frame(docs, kernel, BLOB_SCHEMA)

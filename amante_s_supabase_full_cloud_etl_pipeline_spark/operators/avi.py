@@ -39,13 +39,14 @@ import struct
 
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
-    BinaryType,
     BooleanType,
     LongType,
     StringType,
     StructField,
     StructType,
 )
+
+from .fuse import BLOB_SCHEMA, corpus_frame
 
 _MAX_CHUNKS = 1 << 18
 _MAX_STREAMS = 64
@@ -375,8 +376,6 @@ def synthetic_avi_corpus(docs):
     """(doc_id, blob): deterministic MJPEG AVIs — 2-5 frames of the
     image tier's smooth synthetic photos, cycling fps and idx1
     presence; d % 6 == 5 truncates mid-movi (the torn-tail shape)."""
-    from .multimodal import _fan_out_ids
-
     def kernel(batches):
         import pandas as pd
 
@@ -409,13 +408,7 @@ def synthetic_avi_corpus(docs):
                 {"doc_id": batch["doc_id"], "blob": blobs}
             )
 
-    schema = StructType([
-        StructField("doc_id", LongType()),
-        StructField("blob", BinaryType()),
-    ])
-    return _fan_out_ids(docs.select("doc_id")).mapInPandas(
-        kernel, schema
-    )
+    return corpus_frame(docs, kernel, BLOB_SCHEMA, fan_out=True)
 
 
 def avi_meta(media):

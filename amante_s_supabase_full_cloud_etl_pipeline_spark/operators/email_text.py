@@ -34,13 +34,14 @@ from __future__ import annotations
 import re
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.types import (
     LongType,
     StringType,
     StructField,
     StructType,
 )
+
+from .fuse import Corpus, MediaFamily
 
 _MAX_MESSAGES = 1 << 16       # mbox members per blob
 _MAX_PARTS = 1 << 10          # MIME parts walked per message
@@ -675,9 +676,7 @@ def email_text(media: DataFrame) -> DataFrame:
     (msg_idx 0); an mbox (``From `` leading bytes) fans out in
     archive order. Unparseable blobs emit nothing (S4). Expects
     (doc_id, blob)."""
-    return media.filter(
-        F.col("doc_id").isNotNull() & F.col("blob").isNotNull()
-    ).mapInPandas(_extract_kernel, EMAIL_TEXT_SCHEMA)
+    return EMAIL.extract(media)
 
 
 def email_text_from_docs(docs: DataFrame) -> DataFrame:
@@ -687,13 +686,7 @@ def email_text_from_docs(docs: DataFrame) -> DataFrame:
     corpus frames never cross the JVM boundary. The two-stage form's
     blob-null filter is vacuous here (the corpus kernel never emits
     null blobs)."""
-    from .fuse import fused_pandas
-
-    return fused_pandas(
-        docs.filter(F.col("doc_id").isNotNull()).select("doc_id"),
-        (_corpus_kernel, _extract_kernel),
-        EMAIL_TEXT_SCHEMA,
-    )
+    return EMAIL.from_docs(docs)
 
 
 def _eml_plain(d: int) -> bytes:
@@ -818,13 +811,7 @@ def synthetic_email_corpus(docs: DataFrame) -> DataFrame:
     forwarded message/rfc822; every 11th ≡ 7 is headerless binary
     (S4-skipped). Same (doc_id, blob, media_type) contract as the
     other corpora."""
-    from pyspark.sql.types import BinaryType
+    return EMAIL.corpus(docs)
 
-    schema = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("blob", BinaryType()),
-            StructField("media_type", StringType()),
-        ]
-    )
-    return docs.select("doc_id").mapInPandas(_corpus_kernel, schema)
+
+EMAIL = MediaFamily(EMAIL_TEXT_SCHEMA, Corpus(_corpus_kernel), _extract_kernel)

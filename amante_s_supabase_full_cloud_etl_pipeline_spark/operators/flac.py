@@ -41,6 +41,15 @@ from __future__ import annotations
 
 import struct
 
+from pyspark.sql.types import (
+    LongType,
+    StringType,
+    StructField,
+    StructType,
+)
+
+from .fuse import Corpus, MediaFamily
+
 _MAX_METADATA = 1 << 23       # one metadata block, 8 MiB (the spec
 #                               field maxes at 16 MiB-1; the tighter
 #                               bound keeps the guard LIVE — review
@@ -1065,6 +1074,24 @@ def encode_flac(
 # ── Spark kernel + synthetic corpus ─────────────────────────────
 
 
+FLAC_META_SCHEMA = StructType(
+    [
+        StructField("doc_id", LongType()),
+        StructField("sample_rate", LongType()),
+        StructField("channels", LongType()),
+        StructField("bits_per_sample", LongType()),
+        StructField("total_samples", LongType()),
+        StructField("n_frames", LongType()),
+        StructField("title", StringType()),
+        StructField("artist", StringType()),
+        StructField("md5_state", LongType()),
+        StructField("pcm_crc32", LongType()),
+    ]
+)
+
+_FLAC_COLS = [f.name for f in FLAC_META_SCHEMA.fields]
+
+
 def flac_meta(media):
     """Map-only Arrow kernel: one row per decodable FLAC blob —
     STREAMINFO fields, frame count, vorbis title/artist, the
@@ -1072,57 +1099,7 @@ def flac_meta(media):
     interleaved PCM (a FULL value pin of the decode output — any
     residual/predictor/stereo regression moves it). Non-FLAC and
     damaged blobs emit nothing (S4). Expects (doc_id, blob)."""
-    import zlib
-
-    from pyspark.sql import functions as F
-    from pyspark.sql.types import (
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
-    schema = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("sample_rate", LongType()),
-            StructField("channels", LongType()),
-            StructField("bits_per_sample", LongType()),
-            StructField("total_samples", LongType()),
-            StructField("n_frames", LongType()),
-            StructField("title", StringType()),
-            StructField("artist", StringType()),
-            StructField("md5_state", LongType()),
-            StructField("pcm_crc32", LongType()),
-        ]
-    )
-    return media.filter(
-        F.col("doc_id").isNotNull() & F.col("blob").isNotNull()
-    ).mapInPandas(_meta_kernel, schema)
-
-
-def _flac_meta_schema():
-    from pyspark.sql.types import (
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
-    return StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("sample_rate", LongType()),
-            StructField("channels", LongType()),
-            StructField("bits_per_sample", LongType()),
-            StructField("total_samples", LongType()),
-            StructField("n_frames", LongType()),
-            StructField("title", StringType()),
-            StructField("artist", StringType()),
-            StructField("md5_state", LongType()),
-            StructField("pcm_crc32", LongType()),
-        ]
-    )
+    return FLAC.extract(media)
 
 
 def _meta_kernel(batches):
@@ -1133,7 +1110,6 @@ def _meta_kernel(batches):
 
     import pandas as pd
 
-    cols = [f.name for f in _flac_meta_schema().fields]
     for batch in batches:
         rows = []
         for doc_id, blob in zip(batch["doc_id"], batch["blob"]):
@@ -1176,22 +1152,14 @@ def _meta_kernel(batches):
                     "pcm_crc32": zlib.crc32(pcm),
                 }
             )
-        yield pd.DataFrame(rows, columns=cols)
+        yield pd.DataFrame(rows, columns=_FLAC_COLS)
 
 
 def flac_meta_from_docs(docs):
     """Corpus synthesis + full decode in ONE Python hop (guide §4.1
     via :mod:`.fuse`) — bit-identical rows to
     ``flac_meta(synthetic_flac_corpus(docs).select(...))``."""
-    from pyspark.sql import functions as F
-
-    from .fuse import fused_pandas
-
-    return fused_pandas(
-        docs.filter(F.col("doc_id").isNotNull()).select("doc_id"),
-        (_flac_corpus_kernel, _meta_kernel),
-        _flac_meta_schema(),
-    )
+    return FLAC.from_docs(docs)
 
 
 def build_flac_fixture(d: int) -> bytes:
@@ -1266,22 +1234,7 @@ def synthetic_flac_corpus(docs):
     :func:`build_flac_fixture`); every 11th ≡ 7 is non-FLAC garbage
     (S4-skipped). Same (doc_id, blob, media_type) contract as the
     other corpora."""
-    from pyspark.sql.types import (
-        BinaryType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
-    schema = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("blob", BinaryType()),
-            StructField("media_type", StringType()),
-        ]
-    )
-    return docs.select("doc_id").mapInPandas(_flac_corpus_kernel, schema)
+    return FLAC.corpus(docs)
 
 
 def _flac_corpus_kernel(batches):
@@ -1302,3 +1255,6 @@ def _flac_corpus_kernel(batches):
             {"doc_id": batch["doc_id"], "blob": blobs,
              "media_type": types}
         )
+
+
+FLAC = MediaFamily(FLAC_META_SCHEMA, Corpus(_flac_corpus_kernel), _meta_kernel)

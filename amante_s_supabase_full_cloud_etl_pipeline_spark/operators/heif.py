@@ -39,6 +39,15 @@ from __future__ import annotations
 
 import struct
 
+from pyspark.sql.types import (
+    BooleanType,
+    LongType,
+    StringType,
+    StructField,
+    StructType,
+)
+
+from .fuse import BLOB_SCHEMA, Corpus, MediaFamily
 from .mp4 import (
     _Bomb,
     _Truncated,
@@ -365,35 +374,21 @@ def encode_heif(width: int, height: int, codec: str = "heic",
 
 # ── Spark surface ───────────────────────────────────────────────
 
-HEIF_META_SCHEMA = None  # built lazily below (keeps pyspark import
-#                          out of the pure-parser fast path)
+HEIF_META_SCHEMA = StructType([
+    StructField("doc_id", LongType()),
+    StructField("brand", StringType()),
+    StructField("codec", StringType()),
+    StructField("primary_item", LongType()),
+    StructField("n_items", LongType()),
+    StructField("item_types", StringType()),
+    StructField("width", LongType()),
+    StructField("height", LongType()),
+    StructField("rotation", LongType()),
+    StructField("has_exif", BooleanType()),
+    StructField("primary_bytes", LongType()),
+])
 
-
-def _schema():
-    global HEIF_META_SCHEMA
-    if HEIF_META_SCHEMA is None:
-        from pyspark.sql.types import (
-            BooleanType,
-            LongType,
-            StringType,
-            StructField,
-            StructType,
-        )
-
-        HEIF_META_SCHEMA = StructType([
-            StructField("doc_id", LongType()),
-            StructField("brand", StringType()),
-            StructField("codec", StringType()),
-            StructField("primary_item", LongType()),
-            StructField("n_items", LongType()),
-            StructField("item_types", StringType()),
-            StructField("width", LongType()),
-            StructField("height", LongType()),
-            StructField("rotation", LongType()),
-            StructField("has_exif", BooleanType()),
-            StructField("primary_bytes", LongType()),
-        ])
-    return HEIF_META_SCHEMA
+_HEIF_COLS = [f.name for f in HEIF_META_SCHEMA.fields]
 
 
 def heif_meta(media):
@@ -401,11 +396,7 @@ def heif_meta(media):
     (doc_id, brand, codec, primary_item, n_items, item_types, width,
     height, rotation, has_exif, primary_bytes). Non-HEIF / broken
     blobs emit nothing (S4). Expects (doc_id, blob)."""
-    from pyspark.sql import functions as F
-
-    return media.filter(
-        F.col("doc_id").isNotNull() & F.col("blob").isNotNull()
-    ).mapInPandas(_meta_kernel, _schema())
+    return HEIF.extract(media)
 
 
 def _meta_kernel(batches):
@@ -413,7 +404,6 @@ def _meta_kernel(batches):
     fused composition can reuse it; null blobs S4-skip in-kernel)."""
     import pandas as pd
 
-    cols = [f.name for f in _schema().fields]
     for batch in batches:
         rows = []
         for doc_id, blob in zip(batch["doc_id"], batch["blob"]):
@@ -423,22 +413,14 @@ def _meta_kernel(batches):
             if m is None:
                 continue
             rows.append({"doc_id": int(doc_id), **m})
-        yield pd.DataFrame(rows, columns=cols)
+        yield pd.DataFrame(rows, columns=_HEIF_COLS)
 
 
 def heif_meta_from_docs(docs):
     """Corpus synthesis + item walk in ONE Python hop (guide §4.1
     via :mod:`.fuse`) — bit-identical rows to
     ``heif_meta(synthetic_heif_corpus(docs))``."""
-    from pyspark.sql import functions as F
-
-    from .fuse import fused_pandas
-
-    return fused_pandas(
-        docs.filter(F.col("doc_id").isNotNull()).select("doc_id"),
-        (_heif_corpus_kernel, _meta_kernel),
-        _schema(),
-    )
+    return HEIF.from_docs(docs)
 
 
 def synthetic_heif_corpus(docs):
@@ -446,18 +428,7 @@ def synthetic_heif_corpus(docs):
     dimensions, rotation and Exif items; d % 5 == 4 truncates inside
     meta (identified, not parseable). The triage mixed corpus's HEIF
     leg delegates here."""
-    from pyspark.sql.types import (
-        BinaryType,
-        LongType,
-        StructField,
-        StructType,
-    )
-
-    schema = StructType([
-        StructField("doc_id", LongType()),
-        StructField("blob", BinaryType()),
-    ])
-    return docs.select("doc_id").mapInPandas(_heif_corpus_kernel, schema)
+    return HEIF.corpus(docs)
 
 
 def _heif_corpus_kernel(batches):
@@ -480,3 +451,8 @@ def _heif_corpus_kernel(batches):
         yield pd.DataFrame(
             {"doc_id": batch["doc_id"], "blob": blobs}
         )
+
+
+HEIF = MediaFamily(
+    HEIF_META_SCHEMA, Corpus(_heif_corpus_kernel, BLOB_SCHEMA), _meta_kernel
+)

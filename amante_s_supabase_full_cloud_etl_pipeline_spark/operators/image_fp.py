@@ -45,6 +45,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField, StructType
 
 from .cache import tracked_persist
+from .fuse import BLOB_SCHEMA, corpus_frame
 
 
 def _pooled_gray(arr, ny: int, nx: int):
@@ -287,8 +288,6 @@ def synthetic_near_dup_image_corpus(docs: DataFrame) -> DataFrame:
     across codec FAMILIES (a PNG and its JPEG re-encode must pair;
     images from different groups must not). Worker-side generation
     (Arrow kernel), deterministic in doc_id."""
-    from .multimodal import _fan_out_ids
-
     def kernel(batches):
         import pandas as pd
 
@@ -314,12 +313,4 @@ def synthetic_near_dup_image_corpus(docs: DataFrame) -> DataFrame:
                 {"doc_id": batch["doc_id"], "blob": blobs}
             )
 
-    from pyspark.sql.types import BinaryType
-
-    schema = StructType([
-        StructField("doc_id", LongType()),
-        StructField("blob", BinaryType()),
-    ])
-    return _fan_out_ids(docs.select("doc_id")).mapInPandas(
-        kernel, schema
-    )
+    return corpus_frame(docs, kernel, BLOB_SCHEMA, fan_out=True)

@@ -52,12 +52,13 @@ import struct
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
-    BinaryType,
     LongType,
     StringType,
     StructField,
     StructType,
 )
+
+from .fuse import Corpus, Factory, MediaFamily
 
 _MAX_DEPTH = 16
 _MAX_ELEMENTS = 1 << 20
@@ -781,10 +782,7 @@ def sample_mkv_keyframes(media: DataFrame, every: int = 1) -> DataFrame:
     """Every ``every``-th keyframe per track as (offset, size) + a
     CRC32 of the payload the range slices (the proof the range
     landed on the frame). Corrupt blobs emit nothing (S4)."""
-
-    return media.filter(
-        F.col("doc_id").isNotNull() & F.col("blob").isNotNull()
-    ).mapInPandas(_keyframe_kernel(every), MKV_KEYFRAME_SCHEMA)
+    return MKV_KEYFRAMES.extract(media, every)
 
 
 def _keyframe_kernel(every: int):
@@ -824,14 +822,7 @@ def mkv_keyframes_from_docs(
     §4.1 via :mod:`.fuse`) — bit-identical rows to
     ``sample_mkv_keyframes(synthetic_mkv_corpus(docs).select(...),
     every)``."""
-    from .fuse import fused_pandas
-    from .multimodal import _fan_out_ids
-
-    return fused_pandas(
-        _fan_out_ids(docs.filter(F.col("doc_id").isNotNull())),
-        (_mkv_corpus_kernel(n_clusters), _keyframe_kernel(every)),
-        MKV_KEYFRAME_SCHEMA,
-    )
+    return MKV_KEYFRAMES.from_docs(docs, (n_clusters,), (every,))
 
 
 def synthetic_mkv_corpus(docs: DataFrame, n_clusters: int = 4) -> DataFrame:
@@ -841,19 +832,7 @@ def synthetic_mkv_corpus(docs: DataFrame, n_clusters: int = 4) -> DataFrame:
     (streaming-shape) clusters on d % 5 == 3, matroska doctype on
     d % 7 == 1, a Cues index except d % 6 == 5. Same
     (doc_id, blob, media_type) contract as the other corpora."""
-
-    schema = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("blob", BinaryType()),
-            StructField("media_type", StringType()),
-        ]
-    )
-    from .multimodal import _fan_out_ids
-
-    return _fan_out_ids(docs).mapInPandas(
-        _mkv_corpus_kernel(n_clusters), schema
-    )
+    return MKV_KEYFRAMES.corpus(docs, n_clusters)
 
 
 def _mkv_corpus_kernel(n_clusters: int):
@@ -917,3 +896,10 @@ def _mkv_corpus_kernel(n_clusters: int):
             )
 
     return kernel
+
+
+MKV_KEYFRAMES = MediaFamily(
+    MKV_KEYFRAME_SCHEMA,
+    Corpus(Factory(_mkv_corpus_kernel), fan_out=True),
+    Factory(_keyframe_kernel),
+)

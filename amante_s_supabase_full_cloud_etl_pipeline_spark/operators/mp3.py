@@ -55,6 +55,16 @@ from __future__ import annotations
 
 import struct
 
+from pyspark.sql.types import (
+    BooleanType,
+    LongType,
+    StringType,
+    StructField,
+    StructType,
+)
+
+from .fuse import Corpus, MediaFamily
+
 _MAX_FRAMES = 1 << 20
 _MAX_TAG_BYTES = 1 << 22
 _MAX_SYNC_SCAN = 1 << 16
@@ -622,75 +632,36 @@ def encode_mp3(n_frames: int = 30, version: str = "1", layer: int = 3,
 # ── Spark surface ───────────────────────────────────────────────
 
 
+MP3_META_SCHEMA = StructType(
+    [
+        StructField("doc_id", LongType()),
+        StructField("version", StringType()),
+        StructField("layer", LongType()),
+        StructField("sample_rate", LongType()),
+        StructField("channels", LongType()),
+        StructField("n_frames", LongType()),
+        StructField("duration_ms", LongType()),
+        StructField("bitrate_kbps", LongType()),
+        StructField("vbr", BooleanType()),
+        StructField("vbr_tag", StringType()),
+        StructField("tag_frames", LongType()),
+        StructField("has_crc", BooleanType()),
+        StructField("id3v2_major", LongType()),
+        StructField("has_id3v1", BooleanType()),
+        StructField("title", StringType()),
+        StructField("artist", StringType()),
+        StructField("album", StringType()),
+    ]
+)
+
+_MP3_COLS = [f.name for f in MP3_META_SCHEMA.fields]
+
+
 def mp3_meta(media):
     """Map-only Arrow kernel: one row per parsed MPEG-audio blob —
     version/layer/rate/channels/duration/VBR shape/tags. Non-MP3
     and unsyncable blobs emit nothing (S4). Expects (doc_id, blob)."""
-    from pyspark.sql import functions as F
-    from pyspark.sql.types import (
-        BooleanType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
-    schema = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("version", StringType()),
-            StructField("layer", LongType()),
-            StructField("sample_rate", LongType()),
-            StructField("channels", LongType()),
-            StructField("n_frames", LongType()),
-            StructField("duration_ms", LongType()),
-            StructField("bitrate_kbps", LongType()),
-            StructField("vbr", BooleanType()),
-            StructField("vbr_tag", StringType()),
-            StructField("tag_frames", LongType()),
-            StructField("has_crc", BooleanType()),
-            StructField("id3v2_major", LongType()),
-            StructField("has_id3v1", BooleanType()),
-            StructField("title", StringType()),
-            StructField("artist", StringType()),
-            StructField("album", StringType()),
-        ]
-    )
-    return media.filter(
-        F.col("doc_id").isNotNull() & F.col("blob").isNotNull()
-    ).mapInPandas(_meta_kernel, schema)
-
-
-def _mp3_meta_schema():
-    from pyspark.sql.types import (
-        BooleanType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
-    return StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("version", StringType()),
-            StructField("layer", LongType()),
-            StructField("sample_rate", LongType()),
-            StructField("channels", LongType()),
-            StructField("n_frames", LongType()),
-            StructField("duration_ms", LongType()),
-            StructField("bitrate_kbps", LongType()),
-            StructField("vbr", BooleanType()),
-            StructField("vbr_tag", StringType()),
-            StructField("tag_frames", LongType()),
-            StructField("has_crc", BooleanType()),
-            StructField("id3v2_major", LongType()),
-            StructField("has_id3v1", BooleanType()),
-            StructField("title", StringType()),
-            StructField("artist", StringType()),
-            StructField("album", StringType()),
-        ]
-    )
+    return MP3.extract(media)
 
 
 def _meta_kernel(batches):
@@ -698,7 +669,6 @@ def _meta_kernel(batches):
     fused composition can reuse it; null blobs S4-skip in-kernel)."""
     import pandas as pd
 
-    cols = [f.name for f in _mp3_meta_schema().fields]
     for batch in batches:
         rows = []
         for doc_id, blob in zip(batch["doc_id"], batch["blob"]):
@@ -709,24 +679,16 @@ def _meta_kernel(batches):
                 continue
             rows.append(
                 {"doc_id": int(doc_id),
-                 **{k: meta.get(k) for k in cols if k != "doc_id"}}
+                 **{k: meta.get(k) for k in _MP3_COLS if k != "doc_id"}}
             )
-        yield pd.DataFrame(rows, columns=cols)
+        yield pd.DataFrame(rows, columns=_MP3_COLS)
 
 
 def mp3_meta_from_docs(docs):
     """Corpus synthesis + frame walk in ONE Python hop (guide §4.1
     via :mod:`.fuse`) — bit-identical rows to
     ``mp3_meta(synthetic_mp3_corpus(docs).select(...))``."""
-    from pyspark.sql import functions as F
-
-    from .fuse import fused_pandas
-
-    return fused_pandas(
-        docs.filter(F.col("doc_id").isNotNull()).select("doc_id"),
-        (_mp3_corpus_kernel, _meta_kernel),
-        _mp3_meta_schema(),
-    )
+    return MP3.from_docs(docs)
 
 
 def build_mp3_fixture(d: int) -> bytes:
@@ -773,22 +735,7 @@ def synthetic_mp3_corpus(docs):
     """Deterministic fixture MPEG-audio corpus keyed on doc_id; every
     11th ≡ 7 is non-MP3 garbage (S4-skipped). Same (doc_id, blob,
     media_type) contract as the other corpora."""
-    from pyspark.sql.types import (
-        BinaryType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
-    schema = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("blob", BinaryType()),
-            StructField("media_type", StringType()),
-        ]
-    )
-    return docs.select("doc_id").mapInPandas(_mp3_corpus_kernel, schema)
+    return MP3.corpus(docs)
 
 
 def _mp3_corpus_kernel(batches):
@@ -809,6 +756,9 @@ def _mp3_corpus_kernel(batches):
             {"doc_id": batch["doc_id"], "blob": blobs,
              "media_type": types}
         )
+
+
+MP3 = MediaFamily(MP3_META_SCHEMA, Corpus(_mp3_corpus_kernel), _meta_kernel)
 
 
 # ── cover art (ID3v2 APIC / v2.2 PIC) ───────────────────────────

@@ -78,12 +78,13 @@ import struct
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
-    BinaryType,
     LongType,
     StringType,
     StructField,
     StructType,
 )
+
+from .fuse import Corpus, Factory, MediaFamily
 
 #: bomb caps: a hostile blob can CLAIM anything; we never allocate
 #: or loop past these. Generous against real files: a 2-hour movie
@@ -1677,10 +1678,7 @@ def sample_mp4_keyframes(media: DataFrame, every: int = 1) -> DataFrame:
     range landed on the sample, and the column a downstream decoder
     stage would consume instead of the whole blob. Corrupt blobs and
     out-of-blob ranges emit nothing (S4). Expects (doc_id, blob)."""
-
-    return media.filter(
-        F.col("doc_id").isNotNull() & F.col("blob").isNotNull()
-    ).mapInPandas(_keyframe_kernel(every), KEYFRAME_SCHEMA)
+    return MP4_KEYFRAMES.extract(media, every)
 
 
 def _keyframe_kernel(every: int):
@@ -1723,14 +1721,7 @@ def mp4_keyframes_from_docs(
     §4.1 via :mod:`.fuse`) — bit-identical rows to
     ``sample_mp4_keyframes(synthetic_mp4_corpus(docs).select(...),
     every)``."""
-    from .fuse import fused_pandas
-    from .multimodal import _fan_out_ids
-
-    return fused_pandas(
-        _fan_out_ids(docs.filter(F.col("doc_id").isNotNull())),
-        (_mp4_corpus_kernel(n_samples), _keyframe_kernel(every)),
-        KEYFRAME_SCHEMA,
-    )
+    return MP4_KEYFRAMES.from_docs(docs, (n_samples,), (every,))
 
 
 MP4_SEGMENT_SCHEMA = StructType(
@@ -1803,19 +1794,7 @@ def synthetic_mp4_corpus(docs: DataFrame, n_samples: int = 12) -> DataFrame:
     deterministic presentation duration — cycling the wire shapes
     the parser must hold. Same (doc_id, blob, media_type) contract
     as the other synthetic corpora in :mod:`.multimodal`."""
-
-    schema = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("blob", BinaryType()),
-            StructField("media_type", StringType()),
-        ]
-    )
-    from .multimodal import _fan_out_ids
-
-    return _fan_out_ids(docs).mapInPandas(
-        _mp4_corpus_kernel(n_samples), schema
-    )
+    return MP4_KEYFRAMES.corpus(docs, n_samples)
 
 
 def _mp4_corpus_kernel(n_samples: int):
@@ -1910,3 +1889,10 @@ def _mp4_corpus_kernel(n_samples: int):
             )
 
     return kernel
+
+
+MP4_KEYFRAMES = MediaFamily(
+    KEYFRAME_SCHEMA,
+    Corpus(Factory(_mp4_corpus_kernel), fan_out=True),
+    Factory(_keyframe_kernel),
+)

@@ -53,13 +53,14 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
-    BinaryType,
     DoubleType,
     LongType,
     StringType,
     StructField,
     StructType,
 )
+
+from .fuse import Corpus, Factory, MediaFamily, corpus_frame
 
 if TYPE_CHECKING:  # pragma: no cover
     import pandas as pd
@@ -867,19 +868,6 @@ def _exif_summary(blob: bytes):
     ])
 
 
-def _fan_out_ids(docs: "DataFrame") -> "DataFrame":
-    """Spread the id frame across every core BEFORE a generate/decode
-    kernel. The upstream scan's partitioning follows the parquet file
-    layout (often 1 file at test scale, or a few skewed files in a
-    real landing zone), which would serialize the per-row codec work
-    in a handful of Python workers. Repartitioning HERE is cheap — the
-    only shuffled payload is the id column — whereas repartitioning
-    after blob generation would shuffle the blobs themselves."""
-    ids = docs.select("doc_id")
-    target = ids.sparkSession.sparkContext.defaultParallelism
-    return ids.repartition(target)
-
-
 def synthetic_image_corpus(docs: DataFrame) -> DataFrame:
     """Deterministic image corpus keyed on doc_id cycling all six
     NATIVE codecs — doc_id % 4: 0 → 24-bit BMP, 1 → binary PPM
@@ -896,15 +884,7 @@ def synthetic_image_corpus(docs: DataFrame) -> DataFrame:
     driver-checked ``multimodal_image_decode`` golden row. TIFF is
     lossless, so its decoded stats equal the PPM leg's for the same
     doc_id."""
-
-    schema = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("blob", BinaryType()),
-            StructField("media_type", StringType()),
-        ]
-    )
-    return _fan_out_ids(docs).mapInPandas(_image_corpus_kernel, schema)
+    return IMAGE_FEATURES.corpus(docs)
 
 
 def _image_corpus_kernel(batches):
@@ -1042,15 +1022,7 @@ def synthetic_audio_corpus(docs: DataFrame) -> DataFrame:
     """Deterministic PCM16 WAV corpus keyed on doc_id (sine + harmonic
     mix, amplitude/frequency derived from the id). Worker-side
     generation like the image corpus."""
-
-    schema = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("blob", BinaryType()),
-            StructField("media_type", StringType()),
-        ]
-    )
-    return _fan_out_ids(docs).mapInPandas(_audio_corpus_kernel, schema)
+    return AUDIO_CORPUS.frame(docs)
 
 
 def _audio_corpus_kernel(batches):
@@ -1078,6 +1050,11 @@ def _audio_corpus_kernel(batches):
             {"doc_id": batch["doc_id"], "blob": blobs,
              "media_type": ["audio/wav"] * len(blobs)}
         )
+
+
+#: the WAV corpus, shared with the audio fingerprint family
+#: (:data:`.audio_fp.AUDIO_PROBES`)
+AUDIO_CORPUS = Corpus(_audio_corpus_kernel, fan_out=True)
 
 
 def decode_audio_features(media: DataFrame) -> DataFrame:
@@ -1162,14 +1139,7 @@ def synthetic_video_corpus(docs: DataFrame, n_frames: int = 6) -> DataFrame:
                  "media_type": ["video/x-ppm-stream"] * len(blobs)}
             )
 
-    schema = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("blob", BinaryType()),
-            StructField("media_type", StringType()),
-        ]
-    )
-    return _fan_out_ids(docs).mapInPandas(kernel, schema)
+    return corpus_frame(docs, kernel, fan_out=True)
 
 
 def sample_video_features(media: DataFrame, every: int = 2, round_to: int = 6) -> DataFrame:
@@ -1289,14 +1259,7 @@ def synthetic_gif_animation_corpus(docs: DataFrame, n_frames: int = 6) -> DataFr
                  "media_type": ["image/gif"] * len(blobs)}
             )
 
-    schema = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("blob", BinaryType()),
-            StructField("media_type", StringType()),
-        ]
-    )
-    return _fan_out_ids(docs).mapInPandas(kernel, schema)
+    return corpus_frame(docs, kernel, fan_out=True)
 
 
 def gif_frame_features(
@@ -1373,10 +1336,7 @@ def decode_image_features(media: DataFrame, round_to: int = 6) -> DataFrame:
     one fixed decoder. Throughput-oriented callers that don't need
     cross-environment bit-parity should decode via
     :func:`decode_image`'s default (PIL-first when available)."""
-
-    return media.mapInPandas(
-        _image_feature_kernel(round_to), IMAGE_FEATURE_SCHEMA
-    )
+    return IMAGE_FEATURES.extract(media, round_to)
 
 
 def _image_feature_kernel(round_to: int):
@@ -1428,18 +1388,17 @@ def _image_feature_kernel(round_to: int):
     return kernel
 
 
+IMAGE_FEATURES = MediaFamily(
+    IMAGE_FEATURE_SCHEMA,
+    Corpus(_image_corpus_kernel, fan_out=True),
+    Factory(_image_feature_kernel),
+)
+
+
 def image_features_from_docs(
     docs: DataFrame, round_to: int = 6
 ) -> DataFrame:
     """Corpus synthesis + native decode in ONE Python hop (guide
     §4.1 via :mod:`.fuse`) — bit-identical rows to
     ``decode_image_features(synthetic_image_corpus(docs))``."""
-    from pyspark.sql import functions as F
-
-    from .fuse import fused_pandas
-
-    return fused_pandas(
-        _fan_out_ids(docs.filter(F.col("doc_id").isNotNull())),
-        (_image_corpus_kernel, _image_feature_kernel(round_to)),
-        IMAGE_FEATURE_SCHEMA,
-    )
+    return IMAGE_FEATURES.from_docs(docs, extract_args=(round_to,))

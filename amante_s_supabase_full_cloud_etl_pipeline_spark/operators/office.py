@@ -38,7 +38,6 @@ from __future__ import annotations
 import re
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.types import (
     LongType,
     StringType,
@@ -51,6 +50,7 @@ from ..sources.archives import (
     parse_zip_members,
     zip_extract_member,
 )
+from .fuse import Corpus, MediaFamily
 
 _MAX_PART_BYTES = 1 << 26     # 64 MiB of XML per part
 _MAX_TEXT_BYTES = 1 << 24     # 16 MiB extracted per document
@@ -311,23 +311,14 @@ def office_text(media: DataFrame) -> DataFrame:
     text — the column the dedup/quality/lang-ID operators consume,
     exactly like :func:`.pdf.pdf_text`. Non-office and broken blobs
     emit nothing (S4). Expects (doc_id, blob)."""
-    return media.filter(
-        F.col("doc_id").isNotNull() & F.col("blob").isNotNull()
-    ).mapInPandas(_office_kernel, OFFICE_TEXT_SCHEMA)
+    return OFFICE.extract(media)
 
 
 def office_text_from_docs(docs: DataFrame) -> DataFrame:
     """Corpus synthesis + extraction in ONE Python hop (guide §4.1
     via :mod:`.fuse`) — bit-identical rows to
     ``office_text(synthetic_office_corpus(docs).select(...))``."""
-    from .fuse import fused_pandas
-    from .multimodal import _fan_out_ids
-
-    return fused_pandas(
-        _fan_out_ids(docs.filter(F.col("doc_id").isNotNull())),
-        (_office_corpus_kernel, _office_kernel),
-        OFFICE_TEXT_SCHEMA,
-    )
+    return OFFICE.from_docs(docs)
 
 
 # ── fixture writers ─────────────────────────────────────────────
@@ -479,15 +470,11 @@ def synthetic_office_corpus(docs: DataFrame) -> DataFrame:
     cycles docx (3-6 paragraphs) / pptx (2-4 slides) / odt, with
     every 11th ≡ 7 non-office garbage (S4-skipped). Same
     (doc_id, blob, media_type) contract as the other corpora."""
-    from pyspark.sql.types import BinaryType
+    return OFFICE.corpus(docs)
 
-    schema = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("blob", BinaryType()),
-            StructField("media_type", StringType()),
-        ]
-    )
-    from .multimodal import _fan_out_ids
 
-    return _fan_out_ids(docs).mapInPandas(_office_corpus_kernel, schema)
+OFFICE = MediaFamily(
+    OFFICE_TEXT_SCHEMA,
+    Corpus(_office_corpus_kernel, fan_out=True),
+    _office_kernel,
+)

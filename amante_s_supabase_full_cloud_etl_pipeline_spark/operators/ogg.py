@@ -39,6 +39,16 @@ from __future__ import annotations
 
 import struct
 
+from pyspark.sql.types import (
+    BooleanType,
+    LongType,
+    StringType,
+    StructField,
+    StructType,
+)
+
+from .fuse import Corpus, MediaFamily
+
 _MAX_PAGES = 1 << 20
 _MAX_STREAMS = 16
 _MAX_PACKET = 1 << 24
@@ -415,73 +425,33 @@ def encode_ogg_vorbis(n_packets: int = 40, channels: int = 2,
     )
 
 
-OGG_META_SCHEMA = None  # built lazily in ogg_meta (pyspark import)
+OGG_META_SCHEMA = StructType(
+    [
+        StructField("doc_id", LongType()),
+        StructField("serial", LongType()),
+        StructField("codec", StringType()),
+        StructField("channels", LongType()),
+        StructField("sample_rate", LongType()),
+        StructField("pre_skip", LongType()),
+        StructField("n_pages", LongType()),
+        StructField("n_packets", LongType()),
+        StructField("eos", BooleanType()),
+        StructField("duration_ms", LongType()),
+        StructField("title", StringType()),
+        StructField("artist", StringType()),
+        StructField("width", LongType()),
+        StructField("height", LongType()),
+    ]
+)
+
+_OGG_COLS = [f.name for f in OGG_META_SCHEMA.fields]
 
 
 def ogg_meta(media):
     """Map-only Arrow kernel: one row per logical Ogg stream —
     codec/channels/rate/duration/tags/page+packet counts. Non-Ogg
     and broken blobs emit nothing (S4). Expects (doc_id, blob)."""
-    from pyspark.sql import functions as F
-    from pyspark.sql.types import (
-        BooleanType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
-    schema = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("serial", LongType()),
-            StructField("codec", StringType()),
-            StructField("channels", LongType()),
-            StructField("sample_rate", LongType()),
-            StructField("pre_skip", LongType()),
-            StructField("n_pages", LongType()),
-            StructField("n_packets", LongType()),
-            StructField("eos", BooleanType()),
-            StructField("duration_ms", LongType()),
-            StructField("title", StringType()),
-            StructField("artist", StringType()),
-            StructField("width", LongType()),
-            StructField("height", LongType()),
-        ]
-    )
-    cols = [f.name for f in schema.fields]
-    return media.filter(
-        F.col("doc_id").isNotNull() & F.col("blob").isNotNull()
-    ).mapInPandas(_meta_kernel, schema)
-
-
-def _ogg_meta_schema():
-    from pyspark.sql.types import (
-        BooleanType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
-    return StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("serial", LongType()),
-            StructField("codec", StringType()),
-            StructField("channels", LongType()),
-            StructField("sample_rate", LongType()),
-            StructField("pre_skip", LongType()),
-            StructField("n_pages", LongType()),
-            StructField("n_packets", LongType()),
-            StructField("eos", BooleanType()),
-            StructField("duration_ms", LongType()),
-            StructField("title", StringType()),
-            StructField("artist", StringType()),
-            StructField("width", LongType()),
-            StructField("height", LongType()),
-        ]
-    )
+    return OGG.extract(media)
 
 
 def _meta_kernel(batches):
@@ -489,7 +459,6 @@ def _meta_kernel(batches):
     fused composition can reuse it; null blobs S4-skip in-kernel)."""
     import pandas as pd
 
-    cols = [f.name for f in _ogg_meta_schema().fields]
     for batch in batches:
         rows = []
         for doc_id, blob in zip(batch["doc_id"], batch["blob"]):
@@ -504,27 +473,19 @@ def _meta_kernel(batches):
                         "doc_id": int(doc_id),
                         **{
                             k: m.get(k)
-                            for k in cols
+                            for k in _OGG_COLS
                             if k != "doc_id"
                         },
                     }
                 )
-        yield pd.DataFrame(rows, columns=cols)
+        yield pd.DataFrame(rows, columns=_OGG_COLS)
 
 
 def ogg_meta_from_docs(docs):
     """Corpus synthesis + page walk in ONE Python hop (guide §4.1
     via :mod:`.fuse`) — bit-identical rows to
     ``ogg_meta(synthetic_ogg_corpus(docs).select(...))``."""
-    from pyspark.sql import functions as F
-
-    from .fuse import fused_pandas
-
-    return fused_pandas(
-        docs.filter(F.col("doc_id").isNotNull()).select("doc_id"),
-        (_ogg_corpus_kernel, _meta_kernel),
-        _ogg_meta_schema(),
-    )
+    return OGG.from_docs(docs)
 
 
 def build_ogg_fixture(d: int) -> bytes:
@@ -559,22 +520,7 @@ def synthetic_ogg_corpus(docs):
     """Deterministic fixture Ogg corpus keyed on doc_id; every 11th
     ≡ 7 is non-Ogg garbage (S4-skipped). Same (doc_id, blob,
     media_type) contract as the other corpora."""
-    from pyspark.sql.types import (
-        BinaryType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
-    schema = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("blob", BinaryType()),
-            StructField("media_type", StringType()),
-        ]
-    )
-    return docs.select("doc_id").mapInPandas(_ogg_corpus_kernel, schema)
+    return OGG.corpus(docs)
 
 
 def _ogg_corpus_kernel(batches):
@@ -595,3 +541,6 @@ def _ogg_corpus_kernel(batches):
             {"doc_id": batch["doc_id"], "blob": blobs,
              "media_type": types}
         )
+
+
+OGG = MediaFamily(OGG_META_SCHEMA, Corpus(_ogg_corpus_kernel), _meta_kernel)

@@ -76,6 +76,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from .fuse import Corpus, MediaFamily
+
 _MAX_OBJECTS = 1 << 18          # 262k indirect objects
 _MAX_XREF_SECTIONS = 64         # /Prev chain length
 _MAX_DEPTH = 32                 # object nesting / page-tree depth
@@ -2450,10 +2452,7 @@ def pdf_text(media: DataFrame) -> DataFrame:
     nothing; encrypted documents emit nothing (their pages are
     ciphertext); a damaged single page emits text=NULL while its
     siblings extract. Expects (doc_id, blob)."""
-
-    return media.filter(
-        F.col("doc_id").isNotNull() & F.col("blob").isNotNull()
-    ).mapInPandas(_text_kernel, PDF_TEXT_SCHEMA)
+    return PDF_TEXT.extract(media)
 
 
 def _text_kernel(batches):
@@ -2486,14 +2485,7 @@ def pdf_text_from_docs(docs: DataFrame) -> DataFrame:
     """Corpus synthesis + per-page extraction in ONE Python hop
     (guide §4.1 via :mod:`.fuse`) — bit-identical rows to
     ``pdf_text(synthetic_pdf_corpus(docs).select(...))``."""
-    from .fuse import fused_pandas
-    from .multimodal import _fan_out_ids
-
-    return fused_pandas(
-        _fan_out_ids(docs.filter(F.col("doc_id").isNotNull())),
-        (_pdf_corpus_kernel, _text_kernel),
-        PDF_TEXT_SCHEMA,
-    )
+    return PDF_TEXT.from_docs(docs)
 
 
 def _corpus_pages(d: int) -> list:
@@ -2533,17 +2525,7 @@ def synthetic_pdf_corpus(docs: DataFrame) -> DataFrame:
     password and must refuse text while reporting structure). Same
     (doc_id, blob, media_type) contract as the other synthetic
     corpora."""
-
-    schema = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("blob", BinaryType()),
-            StructField("media_type", StringType()),
-        ]
-    )
-    from .multimodal import _fan_out_ids
-
-    return _fan_out_ids(docs).mapInPandas(_pdf_corpus_kernel, schema)
+    return PDF_TEXT.corpus(docs)
 
 
 def _pdf_corpus_kernel(batches):
@@ -2602,6 +2584,11 @@ def _pdf_corpus_kernel(batches):
             {"doc_id": batch["doc_id"], "blob": blobs,
              "media_type": ["application/pdf"] * len(blobs)}
         )
+
+
+PDF_TEXT = MediaFamily(
+    PDF_TEXT_SCHEMA, Corpus(_pdf_corpus_kernel, fan_out=True), _text_kernel
+)
 
 
 # ── §8.9 image XObjects ─────────────────────────────────────────

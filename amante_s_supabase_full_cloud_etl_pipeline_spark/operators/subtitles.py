@@ -30,13 +30,14 @@ from __future__ import annotations
 import re
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.types import (
     LongType,
     StringType,
     StructField,
     StructType,
 )
+
+from .fuse import Corpus, MediaFamily
 
 _MAX_CUES = 1 << 17
 _MAX_TEXT_BYTES = 1 << 22
@@ -221,22 +222,14 @@ def subtitle_text(media: DataFrame) -> DataFrame:
     """One row per cue with millisecond timing — as-of-joinable
     against the keyframe timestamps the mp4/mkv kernels emit.
     Non-subtitle blobs emit nothing (S4). Expects (doc_id, blob)."""
-    return media.filter(
-        F.col("doc_id").isNotNull() & F.col("blob").isNotNull()
-    ).mapInPandas(_cue_kernel, SUBTITLE_SCHEMA)
+    return SUBTITLES.extract(media)
 
 
 def subtitle_text_from_docs(docs: DataFrame) -> DataFrame:
     """Corpus synthesis + cue parse in ONE Python hop (guide §4.1
     via :mod:`.fuse`) — bit-identical rows to
     ``subtitle_text(synthetic_subtitle_corpus(docs).select(...))``."""
-    from .fuse import fused_pandas
-
-    return fused_pandas(
-        docs.filter(F.col("doc_id").isNotNull()).select("doc_id"),
-        (_subtitle_corpus_kernel, _cue_kernel),
-        SUBTITLE_SCHEMA,
-    )
+    return SUBTITLES.from_docs(docs)
 
 
 def _srt_stamp(ms: int) -> str:
@@ -348,15 +341,9 @@ def synthetic_subtitle_corpus(docs: DataFrame) -> DataFrame:
     cycles SRT/WebVTT across every wire shape the parser handles;
     every 11th ≡ 7 is non-subtitle garbage (S4-skipped). Same
     (doc_id, blob, media_type) contract as the other corpora."""
-    from pyspark.sql.types import BinaryType
+    return SUBTITLES.corpus(docs)
 
-    schema = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("blob", BinaryType()),
-            StructField("media_type", StringType()),
-        ]
-    )
-    return docs.select("doc_id").mapInPandas(
-        _subtitle_corpus_kernel, schema
-    )
+
+SUBTITLES = MediaFamily(
+    SUBTITLE_SCHEMA, Corpus(_subtitle_corpus_kernel), _cue_kernel
+)

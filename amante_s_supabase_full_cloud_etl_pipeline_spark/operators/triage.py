@@ -42,6 +42,8 @@ from __future__ import annotations
 
 import struct
 
+from .fuse import BLOB_SCHEMA, corpus_frame
+
 _FAMILY = {
     "bmp": "image", "ppm": "image", "png": "image", "gif": "image",
     "jpeg": "image", "tiff": "image",
@@ -836,13 +838,6 @@ def synthetic_mixed_corpus(docs):
     return out
 
 def _wav_corpus(ids):
-    from pyspark.sql.types import (
-        BinaryType,
-        LongType,
-        StructField,
-        StructType,
-    )
-
     def kernel(batches):
         import numpy as np
         import pandas as pd
@@ -864,21 +859,10 @@ def _wav_corpus(ids):
                 {"doc_id": batch["doc_id"], "blob": blobs}
             )
 
-    schema = StructType([
-        StructField("doc_id", LongType()),
-        StructField("blob", BinaryType()),
-    ])
-    return ids.mapInPandas(kernel, schema)
+    return corpus_frame(ids, kernel, BLOB_SCHEMA)
 
 
 def _warc_corpus(ids):
-    from pyspark.sql.types import (
-        BinaryType,
-        LongType,
-        StructField,
-        StructType,
-    )
-
     def kernel(batches):
         import pandas as pd
 
@@ -908,21 +892,10 @@ def _warc_corpus(ids):
                 {"doc_id": batch["doc_id"], "blob": blobs}
             )
 
-    schema = StructType([
-        StructField("doc_id", LongType()),
-        StructField("blob", BinaryType()),
-    ])
-    return ids.mapInPandas(kernel, schema)
+    return corpus_frame(ids, kernel, BLOB_SCHEMA)
 
 
 def _garbage_corpus(ids):
-    from pyspark.sql.types import (
-        BinaryType,
-        LongType,
-        StructField,
-        StructType,
-    )
-
     def kernel(batches):
         import pandas as pd
 
@@ -956,11 +929,7 @@ def _garbage_corpus(ids):
                 {"doc_id": batch["doc_id"], "blob": blobs}
             )
 
-    schema = StructType([
-        StructField("doc_id", LongType()),
-        StructField("blob", BinaryType()),
-    ])
-    return ids.mapInPandas(kernel, schema)
+    return corpus_frame(ids, kernel, BLOB_SCHEMA)
 
 
 def _data_corpus(ids):
@@ -973,12 +942,6 @@ def _data_corpus(ids):
     with the magic re-attached (parseable False — the hostile
     variant the golden pins) and every second txt (d % 10 == 9) is a
     bare '{'-prefixed non-JSON (must stay txt, never 'json')."""
-    from pyspark.sql.types import (
-        BinaryType,
-        LongType,
-        StructField,
-        StructType,
-    )
 
     def kernel(batches):
         import io
@@ -1049,11 +1012,7 @@ def _data_corpus(ids):
                 {"doc_id": batch["doc_id"], "blob": blobs}
             )
 
-    schema = StructType([
-        StructField("doc_id", LongType()),
-        StructField("blob", BinaryType()),
-    ])
-    return ids.mapInPandas(kernel, schema)
+    return corpus_frame(ids, kernel, BLOB_SCHEMA)
 
 
 def _gzip_corpus(ids):
@@ -1062,12 +1021,6 @@ def _gzip_corpus(ids):
     64 MiB of zeros in ~64 KB of input; the classifier must spend
     only its 1 MiB budget on it (inner classifies 'unknown': a page
     of NULs is not text)."""
-    from pyspark.sql.types import (
-        BinaryType,
-        LongType,
-        StructField,
-        StructType,
-    )
 
     def kernel(batches):
         import gzip as _gzip
@@ -1102,11 +1055,7 @@ def _gzip_corpus(ids):
                 {"doc_id": batch["doc_id"], "blob": blobs}
             )
 
-    schema = StructType([
-        StructField("doc_id", LongType()),
-        StructField("blob", BinaryType()),
-    ])
-    return ids.mapInPandas(kernel, schema)
+    return corpus_frame(ids, kernel, BLOB_SCHEMA)
 
 
 def _heif_corpus(ids):

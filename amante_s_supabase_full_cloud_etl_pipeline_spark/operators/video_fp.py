@@ -71,7 +71,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
-    BinaryType,
     LongType,
     StructField,
     StructType,
@@ -83,6 +82,7 @@ from .cdc import (
     eligible_hashes,
     pairs_from_posting,
 )
+from .fuse import BLOB_SCHEMA, corpus_frame
 
 #: bands per frame hash — the image tier's banding (4 × 16 bits,
 #: pigeonhole: Hamming ≤ 3 between two frame hashes guarantees one
@@ -355,8 +355,6 @@ def synthetic_near_dup_video_corpus(docs: DataFrame) -> DataFrame:
     brightness-shifted, truncated half-length copy. All variants of
     a group must pair; clips from different groups must not.
     Worker-side generation, deterministic in doc_id."""
-    from .multimodal import _fan_out_ids
-
     def kernel(batches):
         import pandas as pd
 
@@ -372,13 +370,7 @@ def synthetic_near_dup_video_corpus(docs: DataFrame) -> DataFrame:
                 {"doc_id": batch["doc_id"], "blob": blobs}
             )
 
-    schema = StructType([
-        StructField("doc_id", LongType()),
-        StructField("blob", BinaryType()),
-    ])
-    return _fan_out_ids(docs.select("doc_id")).mapInPandas(
-        kernel, schema
-    )
+    return corpus_frame(docs, kernel, BLOB_SCHEMA, fan_out=True)
 
 
 def synthetic_cross_fps_corpus(docs: DataFrame) -> DataFrame:
@@ -393,8 +385,6 @@ def synthetic_cross_fps_corpus(docs: DataFrame) -> DataFrame:
     sampling with ``sample_ms=250`` must therefore hash all three
     rows of a group onto IDENTICAL probe sets, which the golden leg
     pins value-exactly. Worker-side generation, (doc_id, blob)."""
-    from .multimodal import _fan_out_ids
-
     def kernel(batches):
         import numpy as np
         import pandas as pd
@@ -424,13 +414,7 @@ def synthetic_cross_fps_corpus(docs: DataFrame) -> DataFrame:
                 {"doc_id": batch["doc_id"], "blob": blobs}
             )
 
-    schema = StructType([
-        StructField("doc_id", LongType()),
-        StructField("blob", BinaryType()),
-    ])
-    return _fan_out_ids(docs.select("doc_id")).mapInPandas(
-        kernel, schema
-    )
+    return corpus_frame(docs, kernel, BLOB_SCHEMA, fan_out=True)
 
 
 def synthetic_cross_container_corpus(docs: DataFrame) -> DataFrame:
@@ -442,8 +426,6 @@ def synthetic_cross_container_corpus(docs: DataFrame) -> DataFrame:
     containers must pair through the ordinary probe machinery
     (measured ≤2 dHash bits per frame between the JPEG and palette
     renderings). Worker-side generation, (doc_id, blob)."""
-    from .multimodal import _fan_out_ids
-
     def kernel(batches):
         import numpy as np
         import pandas as pd
@@ -479,10 +461,4 @@ def synthetic_cross_container_corpus(docs: DataFrame) -> DataFrame:
                 {"doc_id": batch["doc_id"], "blob": blobs}
             )
 
-    schema = StructType([
-        StructField("doc_id", LongType()),
-        StructField("blob", BinaryType()),
-    ])
-    return _fan_out_ids(docs.select("doc_id")).mapInPandas(
-        kernel, schema
-    )
+    return corpus_frame(docs, kernel, BLOB_SCHEMA, fan_out=True)

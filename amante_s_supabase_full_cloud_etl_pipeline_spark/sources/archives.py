@@ -53,6 +53,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ..operators.fuse import Corpus, Factory, MediaFamily
+
 _MAX_MEMBERS = 1 << 17          # 131k members per archive
 _MAX_NAME = 4096                # bytes per member name
 _MAX_MEMBER_INFLATE = 1 << 28   # 256 MiB decompressed per member
@@ -637,12 +639,7 @@ def archive_extract(
     ZIP payloads are CRC-validated; a member that fails CRC or
     bombs its budget is skipped while its siblings extract (the
     per-member analog of the S4 row contract)."""
-
-    return archives.filter(
-        F.col("doc_id").isNotNull() & F.col("blob").isNotNull()
-    ).mapInPandas(
-        _extract_kernel(max_member_bytes, suffix), ARCHIVE_PAYLOAD_SCHEMA
-    )
+    return ARCHIVE_EXTRACT.extract(archives, max_member_bytes, suffix)
 
 
 def _extract_kernel(max_member_bytes: int, suffix):
@@ -718,13 +715,8 @@ def archive_extract_from_docs(
     §4.1 via operators/fuse.py) — bit-identical rows to
     ``archive_extract(synthetic_archive_corpus(docs).select(...),
     suffix=suffix)``."""
-    from ..operators.fuse import fused_pandas
-    from ..operators.multimodal import _fan_out_ids
-
-    return fused_pandas(
-        _fan_out_ids(docs.filter(F.col("doc_id").isNotNull())),
-        (_archive_corpus_kernel, _extract_kernel(max_member_bytes, suffix)),
-        ARCHIVE_PAYLOAD_SCHEMA,
+    return ARCHIVE_EXTRACT.from_docs(
+        docs, extract_args=(max_member_bytes, suffix)
     )
 
 
@@ -736,17 +728,7 @@ def synthetic_archive_corpus(docs: DataFrame) -> DataFrame:
     tar (gzipped on every second), == 2 non-archive garbage
     (S4-skipped). Same (doc_id, blob, media_type) contract as the
     other synthetic corpora."""
-
-    schema = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("blob", BinaryType()),
-            StructField("media_type", StringType()),
-        ]
-    )
-    from ..operators.multimodal import _fan_out_ids
-
-    return _fan_out_ids(docs).mapInPandas(_archive_corpus_kernel, schema)
+    return ARCHIVE_EXTRACT.corpus(docs)
 
 
 def _archive_corpus_kernel(batches):
@@ -805,3 +787,9 @@ def _archive_corpus_kernel(batches):
              "media_type": types}
         )
 
+
+ARCHIVE_EXTRACT = MediaFamily(
+    ARCHIVE_PAYLOAD_SCHEMA,
+    Corpus(_archive_corpus_kernel, fan_out=True),
+    Factory(_extract_kernel),
+)

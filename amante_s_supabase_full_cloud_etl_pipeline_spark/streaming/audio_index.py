@@ -82,7 +82,22 @@ def fold_audio_index(
     for the LIFETIME of an index (probes folded at different rates
     never match; same contract as the chunker params on the chunk
     index)."""
-    rows = audio_probes(batch, canonical_rate)
+    return _fold_probes(
+        index, audio_probes(batch, canonical_rate), batch_id,
+        max_posting, min_shared,
+    )
+
+
+def _fold_probes(
+    index: ParquetTable,
+    rows: DataFrame,
+    batch_id: int | None,
+    max_posting: int,
+    min_shared: int,
+) -> DataFrame:
+    """The probe-index fold shared with :mod:`.video_index`: pair the
+    batch's (doc_id, probe) ``rows`` with themselves and with the
+    store, then append them under the ``batch_id`` ledger."""
     rows.persist()
     try:
         stored = read_pruned_by_keys(index, rows, "probe")

@@ -47,10 +47,10 @@ stored side IN-prunes by the batch's keys); index growth is
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from ..operators.video_fp import shared_video_pairs, video_probes
-from ..sources.table_format import ParquetTable, read_pruned_by_keys
+from ..sources.table_format import ParquetTable
+from .audio_index import _fold_probes
 
 
 def fold_video_index(
@@ -70,63 +70,10 @@ def fold_video_index(
     frame is materialized BEFORE the append commits, so a batch
     never pairs with itself through the index; replays re-emit the
     same pairs, so the pair sink must be keyed."""
-    rows = video_probes(batch, every, sample_ms)
-    rows.persist()
-    try:
-        stored = read_pruned_by_keys(index, rows, "probe")
-        if stored is not None:
-            stored = stored.select(
-                "probe", F.col("doc_id").alias("doc_s")
-            )
-        both = rows.select("probe", "doc_id")
-        if stored is not None:
-            both = both.unionByName(
-                stored.select("probe", F.col("doc_s").alias("doc_id"))
-            )
-        eligible = (
-            both.groupBy("probe")
-            .agg(F.countDistinct("doc_id").alias("__n"))
-            .filter((F.col("__n") > 1) & (F.col("__n") <= max_posting))
-            .select("probe")
-        )
-        a = rows.select("probe", F.col("doc_id").alias("id_a")).join(
-            eligible, "probe", "left_semi"
-        )
-        in_batch = (
-            a.join(
-                a.select("probe", F.col("id_a").alias("id_b")), "probe"
-            )
-            .filter(F.col("id_a") < F.col("id_b"))
-            .select("id_a", "id_b", "probe")
-        )
-        cand = in_batch
-        if stored is not None:
-            s = stored.join(eligible, "probe", "left_semi")
-            cross = (
-                a.join(s, "probe")
-                .filter(F.col("id_a") != F.col("doc_s"))
-                .select(
-                    F.least("id_a", "doc_s").alias("id_a"),
-                    F.greatest("id_a", "doc_s").alias("id_b"),
-                    "probe",
-                )
-            )
-            cand = in_batch.unionByName(cross)
-        pairs = (
-            cand.groupBy("id_a", "id_b")
-            .agg(F.countDistinct("probe").alias("shared_probes"))
-            .filter(F.col("shared_probes") >= min_shared)
-            .select(
-                F.col("id_a").alias("doc_a"),
-                F.col("id_b").alias("doc_b"),
-                "shared_probes",
-            )
-        )
-        out = pairs.localCheckpoint(eager=True)
-        index.append(rows.select("doc_id", "probe"), batch_id=batch_id)
-        return out
-    finally:
-        rows.unpersist()
+    return _fold_probes(
+        index, video_probes(batch, every, sample_ms), batch_id,
+        max_posting, min_shared,
+    )
 
 
 def stored_video_pairs(

@@ -489,8 +489,6 @@ def _extra_queries():
 
         return per_pass
 
-    media_triage_kernel.untimed_setup = True
-
     def image_near_dup_pairs(spark, sf_dir):
         from pyspark.sql import functions as FF
 
@@ -785,10 +783,13 @@ def run() -> None:
     def force(name: str) -> tuple[float, float]:
         fn = query_fn(name)
         built = fn(spark, sf_dir)
-        # an untimed-setup row (media_triage_kernel) returns a
-        # per-pass frame BUILDER instead of a frame: fn itself ran
-        # that row's documented untimed corpus setup (see the row's
-        # comment) and each pass rebuilds only the measured frame
+        # the untimed-setup protocol, the only one: a row returns
+        # either a frame, or (media_triage_kernel) a zero-argument
+        # per-pass frame BUILDER. A builder means fn itself ran the
+        # row's untimed setup and each pass rebuilds only the
+        # measured frame. Every caller (here, tools/bench_one.py,
+        # tools/profile_row.py, tools/explain_one.py) tells the two
+        # apart by callable(built); rows carry no flag.
         mk = built if callable(built) else None
         # warm-up pass: pays one-off Catalyst/codegen/JIT compile
         (mk() if mk else built).write.mode("overwrite").format(

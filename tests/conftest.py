@@ -24,3 +24,15 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_CORRECTNESS
+
+
+@pytest.fixture(scope="session")
+def global_serving_views(spark, sf_dir) -> list[str]:
+    """Every registry view registered once per session as global temp
+    views (the Thrift and Connect serving legs both read them);
+    returns the qualified view names."""
+    from amante_s_supabase_full_cloud_etl_pipeline_spark.serve import (
+        create_serving_views,
+    )
+
+    return create_serving_views(spark, sf_dir, scope="global")

@@ -25,9 +25,6 @@ from amante_s_supabase_full_cloud_etl_pipeline_spark.connect_client import (
     start_connect_server,
     stop_connect_server,
 )
-from amante_s_supabase_full_cloud_etl_pipeline_spark.serve import (
-    create_serving_views,
-)
 
 _HOST = "127.0.0.1"
 
@@ -118,14 +115,15 @@ def _execute_sql(spark, port, query):
     return pa.concat_tables(tables)
 
 
-def test_execute_plan_serves_registry_view(spark, sf_dir, connect_port):
+def test_execute_plan_serves_registry_view(
+    spark, connect_port, global_serving_views
+):
     """The serving contract end-to-end over Connect: global serving
     views registered by serve.py, queried via ExecutePlan from the
     stdlib transport, Arrow results equal to the direct in-session
     answer. Connect sessions are ISOLATED from the creating session —
     global temp views are exactly the crossing mechanism (same reason
     the Thrift leg uses scope='global')."""
-    create_serving_views(spark, sf_dir, scope="global")
     q = (
         "SELECT region_name, net_sales, line_items "
         "FROM global_temp.serve_star_net_sales_by_region "

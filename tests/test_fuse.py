@@ -1,17 +1,86 @@
-"""Fused one-hop corpus→kernel variants (operators/fuse.py, r14
-optimization round, guide §4.1) must be bit-identical to their
-two-stage compositions — the contract every bench row and declared
-query leg that switched to a ``*_from_docs`` variant relies on."""
+"""Every media family's fused one-hop ``*_from_docs`` operator
+(operators/fuse.py, guide §4.1) must be bit-identical to its two-stage
+composition — the contract every bench row and declared query leg
+that switched to a ``*_from_docs`` variant relies on — and every
+operator derived from a family declaration must carry the declared
+schema."""
 
 from __future__ import annotations
+
+import importlib
 
 import pytest
 
 from amante_s_supabase_full_cloud_etl_pipeline_spark import catalog
 
+_PKG = "amante_s_supabase_full_cloud_etl_pipeline_spark."
+
+#: family → (module, family declaration, fused op, two-stage op,
+#: corpus op, operator parameters); a corpus op given as
+#: "module.name" lives outside the family's module
+FAMILIES = {
+    "email": ("operators.email_text", "EMAIL", "email_text_from_docs",
+              "email_text", "synthetic_email_corpus", {}),
+    "office": ("operators.office", "OFFICE", "office_text_from_docs",
+               "office_text", "synthetic_office_corpus", {}),
+    "subtitles": ("operators.subtitles", "SUBTITLES",
+                  "subtitle_text_from_docs", "subtitle_text",
+                  "synthetic_subtitle_corpus", {}),
+    "ogg": ("operators.ogg", "OGG", "ogg_meta_from_docs",
+            "ogg_meta", "synthetic_ogg_corpus", {}),
+    "mp3": ("operators.mp3", "MP3", "mp3_meta_from_docs",
+            "mp3_meta", "synthetic_mp3_corpus", {}),
+    "flac": ("operators.flac", "FLAC", "flac_meta_from_docs",
+             "flac_meta", "synthetic_flac_corpus", {}),
+    "heif": ("operators.heif", "HEIF", "heif_meta_from_docs",
+             "heif_meta", "synthetic_heif_corpus", {}),
+    "pdf": ("operators.pdf", "PDF_TEXT", "pdf_text_from_docs",
+            "pdf_text", "synthetic_pdf_corpus", {}),
+    "mp4": ("operators.mp4", "MP4_KEYFRAMES", "mp4_keyframes_from_docs",
+            "sample_mp4_keyframes", "synthetic_mp4_corpus", {"every": 3}),
+    "mkv": ("operators.mkv", "MKV_KEYFRAMES", "mkv_keyframes_from_docs",
+            "sample_mkv_keyframes", "synthetic_mkv_corpus", {"every": 3}),
+    "archives": ("sources.archives", "ARCHIVE_EXTRACT",
+                 "archive_extract_from_docs", "archive_extract",
+                 "synthetic_archive_corpus", {"suffix": ".txt"}),
+    "audio_probes": ("operators.audio_fp", "AUDIO_PROBES",
+                     "audio_probes_from_docs", "audio_probes",
+                     "operators.multimodal.synthetic_audio_corpus", {}),
+    "image_features": ("operators.multimodal", "IMAGE_FEATURES",
+                       "image_features_from_docs", "decode_image_features",
+                       "synthetic_image_corpus", {}),
+}
+
 
 def _rows(df):
     return sorted(tuple(str(x) for x in r) for r in df.collect())
+
+
+def _attr(module, name):
+    if "." in name:
+        owner, name = name.rsplit(".", 1)
+        module = importlib.import_module(_PKG + owner)
+    return getattr(module, name)
+
+
+def _family_test(module, family, fused, two_stage, corpus, params):
+    def test(self, docs):
+        m = importlib.import_module(_PKG + module)
+        fam = getattr(m, family)
+        media = _attr(m, corpus)(docs)
+        assert media.schema == fam.source.schema
+        # the image kernel reads media_type; every other extract
+        # takes the (doc_id, blob) pair
+        if family != "IMAGE_FEATURES":
+            media = media.select("doc_id", "blob")
+        one_hop = getattr(m, fused)(docs, **params)
+        two_hop = getattr(m, two_stage)(media, **params)
+
+        assert one_hop.schema == fam.schema
+        assert two_hop.schema == fam.schema
+        assert _rows(one_hop) == _rows(two_hop)
+
+    return test
 
 
 @pytest.mark.usefixtures("spark")
@@ -24,149 +93,29 @@ class TestFusedVariants:
             F.col("doc_id") < 60
         )
 
-    def test_email(self, docs):
-        from amante_s_supabase_full_cloud_etl_pipeline_spark.operators import (
-            email_text as m,
-        )
 
-        assert _rows(m.email_text_from_docs(docs)) == _rows(
-            m.email_text(
-                m.synthetic_email_corpus(docs).select("doc_id", "blob")
-            )
-        )
+def test_kernel_parameters_follow_the_declaration():
+    """A Factory is always called, so a missing parameter fails when
+    the plan is built; a plain kernel refuses parameters."""
+    from amante_s_supabase_full_cloud_etl_pipeline_spark.operators.fuse import (
+        Factory,
+        _kernel,
+    )
 
-    def test_office(self, docs):
-        from amante_s_supabase_full_cloud_etl_pipeline_spark.operators import (
-            office as m,
-        )
+    def plain(batches):
+        return batches
 
-        assert _rows(m.office_text_from_docs(docs)) == _rows(
-            m.office_text(
-                m.synthetic_office_corpus(docs).select("doc_id", "blob")
-            )
-        )
+    def make(every):
+        return plain
 
-    def test_subtitles(self, docs):
-        from amante_s_supabase_full_cloud_etl_pipeline_spark.operators import (
-            subtitles as m,
-        )
+    assert _kernel(plain, ()) is plain
+    assert _kernel(Factory(make), (3,)) is plain
+    with pytest.raises(TypeError):
+        _kernel(Factory(make), ())
+    with pytest.raises(TypeError):
+        _kernel(plain, (3,))
 
-        assert _rows(m.subtitle_text_from_docs(docs)) == _rows(
-            m.subtitle_text(
-                m.synthetic_subtitle_corpus(docs).select("doc_id", "blob")
-            )
-        )
 
-    def test_ogg(self, docs):
-        from amante_s_supabase_full_cloud_etl_pipeline_spark.operators import (
-            ogg as m,
-        )
-
-        assert _rows(m.ogg_meta_from_docs(docs)) == _rows(
-            m.ogg_meta(
-                m.synthetic_ogg_corpus(docs).select("doc_id", "blob")
-            )
-        )
-
-    def test_mp3(self, docs):
-        from amante_s_supabase_full_cloud_etl_pipeline_spark.operators import (
-            mp3 as m,
-        )
-
-        assert _rows(m.mp3_meta_from_docs(docs)) == _rows(
-            m.mp3_meta(
-                m.synthetic_mp3_corpus(docs).select("doc_id", "blob")
-            )
-        )
-
-    def test_flac(self, docs):
-        from amante_s_supabase_full_cloud_etl_pipeline_spark.operators import (
-            flac as m,
-        )
-
-        assert _rows(m.flac_meta_from_docs(docs)) == _rows(
-            m.flac_meta(
-                m.synthetic_flac_corpus(docs).select("doc_id", "blob")
-            )
-        )
-
-    def test_heif(self, docs):
-        from amante_s_supabase_full_cloud_etl_pipeline_spark.operators import (
-            heif as m,
-        )
-
-        assert _rows(m.heif_meta_from_docs(docs)) == _rows(
-            m.heif_meta(m.synthetic_heif_corpus(docs))
-        )
-
-    def test_pdf(self, docs):
-        from amante_s_supabase_full_cloud_etl_pipeline_spark.operators import (
-            pdf as m,
-        )
-
-        assert _rows(m.pdf_text_from_docs(docs)) == _rows(
-            m.pdf_text(
-                m.synthetic_pdf_corpus(docs).select("doc_id", "blob")
-            )
-        )
-
-    def test_mp4(self, docs):
-        from amante_s_supabase_full_cloud_etl_pipeline_spark.operators import (
-            mp4 as m,
-        )
-
-        assert _rows(m.mp4_keyframes_from_docs(docs, every=3)) == _rows(
-            m.sample_mp4_keyframes(
-                m.synthetic_mp4_corpus(docs).select("doc_id", "blob"),
-                every=3,
-            )
-        )
-
-    def test_mkv(self, docs):
-        from amante_s_supabase_full_cloud_etl_pipeline_spark.operators import (
-            mkv as m,
-        )
-
-        assert _rows(m.mkv_keyframes_from_docs(docs, every=3)) == _rows(
-            m.sample_mkv_keyframes(
-                m.synthetic_mkv_corpus(docs).select("doc_id", "blob"),
-                every=3,
-            )
-        )
-
-    def test_archives(self, docs):
-        from amante_s_supabase_full_cloud_etl_pipeline_spark.sources import (
-            archives as m,
-        )
-
-        assert _rows(
-            m.archive_extract_from_docs(docs, suffix=".txt")
-        ) == _rows(
-            m.archive_extract(
-                m.synthetic_archive_corpus(docs).select("doc_id", "blob"),
-                suffix=".txt",
-            )
-        )
-
-    def test_audio_probes(self, docs):
-        from amante_s_supabase_full_cloud_etl_pipeline_spark.operators import (
-            audio_fp as a,
-        )
-        from amante_s_supabase_full_cloud_etl_pipeline_spark.operators import (
-            multimodal as mm,
-        )
-
-        assert _rows(a.audio_probes_from_docs(docs)) == _rows(
-            a.audio_probes(
-                mm.synthetic_audio_corpus(docs).select("doc_id", "blob")
-            )
-        )
-
-    def test_image_features(self, docs):
-        from amante_s_supabase_full_cloud_etl_pipeline_spark.operators import (
-            multimodal as mm,
-        )
-
-        assert _rows(mm.image_features_from_docs(docs)) == _rows(
-            mm.decode_image_features(mm.synthetic_image_corpus(docs))
-        )
+# one test per family, all running the same body over the table
+for _name, _spec in FAMILIES.items():
+    setattr(TestFusedVariants, "test_" + _name, _family_test(*_spec))

@@ -578,3 +578,39 @@ def test_fused_delta_rank_identical_and_checkpoints_released(spark):
     proj.count()
     _free_checkpoint(proj)
     assert jsc.getPersistentRDDs().size() <= base
+
+
+def test_hash_collision_falls_back_to_string_keys(spark, monkeypatch):
+    """Forces the string-key fallback of pagerank's hashed staging:
+    with ``xxhash64`` (as pagerank.py sees it) pinned to a constant,
+    every node key collides, the collision check rejects the hashed
+    leaf, the staging reruns keyed by name, and the ranks equal the
+    unpatched run's."""
+    from amante_s_supabase_full_cloud_etl_pipeline_spark.operators import (
+        pagerank as pr,
+    )
+
+    edges = [
+        ("a", "b"), ("a", "c"), ("b", "c"), ("c", "a"),
+        ("d", "c"), ("e", "d"), ("b", "sink"),
+    ]
+    df = spark.createDataFrame(edges, "src string, dst string")
+    want = _ranks(pagerank(df, max_iters=3, tol=0.0))
+
+    calls = []
+    stage_keyed = pr._stage_keyed
+
+    def recording(raw, persisted, hashed):
+        calls.append(hashed)
+        return stage_keyed(raw, persisted, hashed)
+
+    monkeypatch.setattr(pr, "_stage_keyed", recording)
+    monkeypatch.setattr(
+        pr.F, "xxhash64", lambda *cols: F.lit(7).cast("long")
+    )
+    got = _ranks(pagerank(df, max_iters=3, tol=0.0))
+
+    assert calls == [True, False]
+    assert got.keys() == want.keys()
+    for node in want:
+        assert got[node] == pytest.approx(want[node], abs=1e-12), node

@@ -13,7 +13,6 @@ import subprocess
 import pytest
 
 from amante_s_supabase_full_cloud_etl_pipeline_spark.serve import (
-    create_serving_views,
     start_thrift_endpoint,
 )
 
@@ -48,11 +47,11 @@ def _beeline(url: str, sql: str, cols: list[str]) -> list[dict]:
     return rows
 
 
-def test_thrift_endpoint_serves_registry_views(spark, sf_dir):
-    if not os.path.exists(BEELINE):
-        pytest.skip("beeline not available")
-    views = create_serving_views(spark, sf_dir, scope="global")
-    assert "global_temp.serve_pos_dashboard_kpis" in views
+@pytest.mark.skipif(
+    not os.path.exists(BEELINE), reason="beeline not available"
+)
+def test_thrift_endpoint_serves_registry_views(spark, global_serving_views):
+    assert "global_temp.serve_pos_dashboard_kpis" in global_serving_views
     url, server = start_thrift_endpoint(spark)
     try:
         # a serving view through JDBC == the same view queried directly
