@@ -35,14 +35,17 @@ BROADCAST_DIMS: frozenset[str] = frozenset({"region", "nation", "supplier", "par
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
-#: inferred parquet schema per file path (r14, guide §6 metadata
-#: caching): ``spark.read.parquet`` reads footers to infer the schema
-#: at FRAME CONSTRUCTION time — ~0.1 s per table per query build, the
-#: dominant untimed cost the r14 bench-window fix surfaced. Schemas
-#: are a property of the files (immutable test data), not of any
-#: query's result, so caching them is table-metadata discipline (the
-#: same class as Spark's own FileStatusCache), not result caching.
-_SCHEMA_CACHE: dict[str, object] = {}
+#: inferred parquet schema per (path, mtime, nanosAsLong conf) (r14
+#: metadata caching): ``spark.read.parquet`` reads footers to infer
+#: the schema at FRAME CONSTRUCTION time — ~0.1 s per table per query
+#: build, the dominant untimed cost the r14 bench-window fix surfaced. Schemas are a property of the files, not of any query's
+#: result, so caching them is table-metadata discipline (the same
+#: class as Spark's own FileStatusCache), not result caching. The key
+#: carries the path's ``st_mtime_ns``, so a table rewritten in place
+#: (``tools/make_sf1.py``) is re-inferred, and the reader conf that
+#: changes how TIMESTAMP(NANOS) infers, so a session with the other
+#: setting never reuses the schema.
+_SCHEMA_CACHE: dict[tuple, object] = {}
 
 
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -50,10 +53,19 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; have {TABLES}")
     path = os.path.join(sf_dir, f"{name}.parquet")
-    schema = _SCHEMA_CACHE.get(path)
+    try:
+        mtime = os.stat(path).st_mtime_ns
+    except OSError:
+        mtime = None  # not a local path: key by path and conf only
+    key = (
+        path,
+        mtime,
+        spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false"),
+    )
+    schema = _SCHEMA_CACHE.get(key)
     if schema is None:
         df = spark.read.parquet(path)
-        _SCHEMA_CACHE[path] = df.schema
+        _SCHEMA_CACHE[key] = df.schema
     else:
         df = spark.read.schema(schema).parquet(path)
     if name == "events":

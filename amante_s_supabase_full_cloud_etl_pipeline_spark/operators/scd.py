@@ -132,12 +132,11 @@ def scd2_apply(
     current = table.read(filters=[("is_current", "=", True)]).filter(
         F.col("is_current")
     )
-    # persist: the no-op probe and the merge both consume the delta —
-    # without it the current-slice join would execute twice
+    # persist: the stale-version probe and the merge both consume the
+    # delta — without it the current-slice join would execute twice.
+    # An empty delta needs no probe: the merge commits nothing for it.
     delta = scd2_delta(current, updates, keys, tracked, effective).persist()
     try:
-        if not delta.take(1):
-            return table.current_version()
         # Precondition: ``effective`` is strictly greater than every
         # affected current version's valid_from. A violation makes the
         # closing row and a prior version share the same (key,

@@ -111,7 +111,7 @@ import json
 import os
 import shutil
 import uuid
-from collections.abc import Sequence
+from collections.abc import Callable, Sequence
 from decimal import Decimal
 
 from pyspark.sql import DataFrame, SparkSession
@@ -453,6 +453,16 @@ def _fold_bounds(entries: list[dict]) -> dict:
 
 class ParquetTable:
     """A snapshot-isolated parquet table rooted at ``path``.
+
+    One no-op rule for the three DML writes (:meth:`merge`,
+    :meth:`delete_where`, :meth:`update_where`): a write that changes
+    no row — a zero-row merge batch, a delete or update whose
+    filters no file can match, a replayed ``batch_id`` — commits
+    nothing and returns the current version, recording no ledger
+    entry. Callers need no emptiness probe of their own. The one
+    exception is a zero-row merge into a version-0 table, which
+    commits so the table becomes readable (empty, with the batch's
+    schema).
 
     ``manifest_merge_at`` bounds the manifest-list length: a commit
     that would exceed it folds the smallest manifest files into one
@@ -922,6 +932,52 @@ class ParquetTable:
             None, parent, schema=schema_json, maintenance=True,
         )
 
+    def _rewrite_pruned(
+        self,
+        parent: int,
+        filters: Sequence[tuple] | None,
+        rewrite: Callable[[DataFrame], DataFrame],
+        batch_id: int | None,
+        schema: str | None,
+        insert: DataFrame | None = None,
+    ) -> int:
+        """The pruned rewrite-and-commit the three DML writes share.
+        A parent manifest whose folded bounds prove no row can match
+        ``filters`` carries into the new list verbatim (never
+        opened); an intersecting manifest is opened and only its
+        intersecting FILES are read, the rest re-listed by reference
+        (``filters`` None prunes nothing). ``rewrite`` maps the
+        touched files' rows to the rows replacing them. With no file
+        touched, ``insert`` is written instead, or, when it is None,
+        nothing commits and the parent version is returned."""
+        m = self.manifest(parent)
+        carried: list[dict] = []  # whole manifests, never opened
+        untouched: list[dict] = []  # entries from opened manifests
+        touched: list[str] = []  # file paths entering the rewrite
+        for s in m["manifests"]:
+            mb = s.get("bounds") or {}
+            if filters and mb and _file_prunable(_bounds_as_stats(mb), filters):
+                carried.append(s)
+                continue
+            for e in self._manifest_entries(s["path"]):
+                if filters and _file_prunable(e, filters):
+                    untouched.append(e)
+                else:
+                    touched.append(e["path"])
+        if touched:
+            out = rewrite(
+                self._read_paths([os.path.join(self.path, p) for p in touched], m)
+            )
+        elif insert is not None:
+            out = insert
+        else:
+            return parent  # no file can hold a matching row: no-op
+        rel = self._write_data_dir(out)
+        if untouched:
+            carried.append(self._write_manifest(untouched))
+        carried.append(self._write_manifest(self._stats_for_dir(rel)))
+        return self._commit(carried, batch_id, parent, schema=schema)
+
     def merge(
         self,
         batch: DataFrame,
@@ -945,7 +1001,15 @@ class ParquetTable:
         merge is O(touched + batch) in both data AND metadata — at
         100 TB with a range-compacted layout (``compact(
         sort_by=keys)``) a point-keyed micro-batch touches a handful
-        of files under a handful of manifests."""
+        of files under a handful of manifests.
+
+        A zero-row batch commits nothing and returns the current
+        version: no files, no manifest and no ``batch_id`` ledger
+        entry, so a later non-empty batch reusing the id still
+        applies. The row count rides the key-bounds aggregation, so
+        the rule costs no extra Spark job. Exception: at version 0 a
+        zero-row batch still commits, which bootstraps a readable,
+        empty table with the batch's schema."""
         parent = self.current_version()
         if self._already_applied(batch_id, parent):
             return parent
@@ -953,50 +1017,29 @@ class ParquetTable:
         schema_json, evolved = self._evolved(parent, batch)
         if evolved is not None:
             batch = _align(batch, evolved)
-        if parent == 0:
-            rel = self._write_data_dir(batch)
-            return self._commit(
-                [self._write_manifest(self._stats_for_dir(rel))],
-                batch_id, parent, schema=schema_json,
-            )
-
-        bounds = batch.agg(
-            F.min(keys[0]).alias("lo"), F.max(keys[0]).alias("hi")
-        ).collect()[0]
         key_filters = None
-        if bounds["lo"] is not None:
-            key_filters = [
-                (keys[0], ">=", bounds["lo"]),
-                (keys[0], "<=", bounds["hi"]),
-            ]
-        carried: list[dict] = []  # whole manifests, never opened
-        untouched: list[dict] = []  # entries from opened manifests
-        touched: list[str] = []  # file paths entering the rewrite
-        for s in self.manifest(parent)["manifests"]:
-            mb = s.get("bounds") or {}
-            if key_filters and mb and _file_prunable(_bounds_as_stats(mb), key_filters):
-                carried.append(s)
-                continue
-            for e in self._manifest_entries(s["path"]):
-                if key_filters and _file_prunable(e, key_filters):
-                    untouched.append(e)
-                else:
-                    touched.append(e["path"])
-        if touched:
-            target = self._read_paths(
-                [os.path.join(self.path, p) for p in touched], self.manifest(parent)
-            )
+        if parent > 0:
+            bounds = batch.agg(
+                F.count(F.lit(1)).alias("n"),
+                F.min(keys[0]).alias("lo"),
+                F.max(keys[0]).alias("hi"),
+            ).collect()[0]
+            if bounds["n"] == 0:
+                return parent  # empty batch: nothing commits
+            if bounds["lo"] is not None:
+                key_filters = [
+                    (keys[0], ">=", bounds["lo"]),
+                    (keys[0], "<=", bounds["hi"]),
+                ]
+
+        def upsert(target: DataFrame) -> DataFrame:
             if evolved is not None:
                 target = _align(target, evolved)
-            merged = merge_upsert(target, batch, keys)
-        else:
-            merged = batch
-        rel = self._write_data_dir(merged)
-        manifests = list(carried)
-        if untouched:
-            manifests.append(self._write_manifest(untouched))
-        manifests.append(self._write_manifest(self._stats_for_dir(rel)))
-        return self._commit(manifests, batch_id, parent, schema=schema_json)
+            return merge_upsert(target, batch, keys)
+
+        return self._rewrite_pruned(
+            parent, key_filters, upsert, batch_id, schema_json, insert=batch
+        )
 
     def merge_with_retry(
         self,
@@ -1066,35 +1109,11 @@ class ParquetTable:
         parent = self.current_version()
         if self._already_applied(batch_id, parent):
             return parent
-        if parent == 0:
-            return parent  # empty table: nothing to delete
-        carried: list[dict] = []
-        untouched: list[dict] = []
-        touched: list[str] = []
-        for s in self.manifest(parent)["manifests"]:
-            mb = s.get("bounds") or {}
-            if mb and _file_prunable(_bounds_as_stats(mb), filters):
-                carried.append(s)
-                continue
-            for e in self._manifest_entries(s["path"]):
-                if _file_prunable(e, filters):
-                    untouched.append(e)
-                else:
-                    touched.append(e["path"])
-        if not touched:
-            return parent  # no file can hold a matching row: no-op
-        target = self._read_paths(
-            [os.path.join(self.path, p) for p in touched], self.manifest(parent)
-        )
         # keep rows where the condition is FALSE or NULL
-        remaining = target.filter(~F.coalesce(_filter_condition(filters), F.lit(False)))
-        rel = self._write_data_dir(remaining)
-        manifests = list(carried)
-        if untouched:
-            manifests.append(self._write_manifest(untouched))
-        manifests.append(self._write_manifest(self._stats_for_dir(rel)))
-        return self._commit(
-            manifests, batch_id, parent, schema=self.manifest(parent).get("schema")
+        keep = ~F.coalesce(_filter_condition(filters), F.lit(False))
+        return self._rewrite_pruned(
+            parent, filters, lambda target: target.filter(keep), batch_id,
+            self.manifest(parent).get("schema"),
         )
 
     def update_where(
@@ -1117,8 +1136,6 @@ class ParquetTable:
         parent = self.current_version()
         if self._already_applied(batch_id, parent):
             return parent
-        if parent == 0:
-            return parent
         schema = self.schema(parent)
         if schema is not None:
             known = {f.name: f.dataType for f in schema.fields}
@@ -1127,38 +1144,18 @@ class ParquetTable:
                     raise ValueError(
                         f"update_where: unknown column {c!r}; table has {sorted(known)}"
                     )
-        carried: list[dict] = []
-        untouched: list[dict] = []
-        touched: list[str] = []
-        for s in self.manifest(parent)["manifests"]:
-            mb = s.get("bounds") or {}
-            if mb and _file_prunable(_bounds_as_stats(mb), filters):
-                carried.append(s)
-                continue
-            for e in self._manifest_entries(s["path"]):
-                if _file_prunable(e, filters):
-                    untouched.append(e)
-                else:
-                    touched.append(e["path"])
-        if not touched:
-            return parent
-        target = self._read_paths(
-            [os.path.join(self.path, p) for p in touched], self.manifest(parent)
-        )
         cond = F.coalesce(_filter_condition(filters), F.lit(False))
-        updated = target
-        for c, v in assignments.items():
-            expr = v if hasattr(v, "cast") else F.lit(v)
-            if schema is not None:
-                expr = expr.cast(known[c])
-            updated = updated.withColumn(c, F.when(cond, expr).otherwise(F.col(c)))
-        rel = self._write_data_dir(updated)
-        manifests = list(carried)
-        if untouched:
-            manifests.append(self._write_manifest(untouched))
-        manifests.append(self._write_manifest(self._stats_for_dir(rel)))
-        return self._commit(
-            manifests, batch_id, parent, schema=self.manifest(parent).get("schema")
+
+        def updated(target: DataFrame) -> DataFrame:
+            for c, v in assignments.items():
+                expr = v if hasattr(v, "cast") else F.lit(v)
+                if schema is not None:
+                    expr = expr.cast(known[c])
+                target = target.withColumn(c, F.when(cond, expr).otherwise(F.col(c)))
+            return target
+
+        return self._rewrite_pruned(
+            parent, filters, updated, batch_id, self.manifest(parent).get("schema")
         )
 
     # -- change data feed ---------------------------------------------------

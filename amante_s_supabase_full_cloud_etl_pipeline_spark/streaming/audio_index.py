@@ -193,11 +193,7 @@ def audio_index_writer(
     observation of the same pair is the more conservative one,
     closer to the exact :func:`stored_audio_pairs` view (review
     catch: an earlier docstring claimed keep-larger, which the merge
-    never implemented and which has the monotonicity backwards). A
-    pair-less batch skips the merge outright — an empty merge has
-    null key bounds, so nothing prunes and the whole pair table
-    rewrites for a no-op (the crawl-index guard; replay stays
-    convergent because the fold recomputes identical pairs).
+    never implemented and which has the monotonicity backwards).
     ``compact_at_files`` bounds the index's live file count, sorted
     by probe so the fold's IN-prune keeps skipping files."""
 
@@ -211,20 +207,11 @@ def audio_index_writer(
             max_posting=max_posting,
             min_shared=min_shared,
         )
-        # found is eagerly checkpointed — the probe is cheap
-        if found.limit(1).count():
-            pairs.merge(
-                found,
-                keys=["doc_a", "doc_b"],
-                order_by=["shared_probes"],
-                batch_id=batch_id,
-            )
-        elif pairs.current_version() == 0:
-            # bootstrap the table schema so consumers can read() an
-            # EMPTY pair table on a duplicate-free stream (review
-            # catch: the merge skip left version 0, where read()
-            # raises) — a zero-row APPEND is O(1), unlike the empty
-            # MERGE's full-table rewrite the skip exists to avoid
-            pairs.append(found, batch_id=batch_id)
+        pairs.merge(
+            found,
+            keys=["doc_a", "doc_b"],
+            order_by=["shared_probes"],
+            batch_id=batch_id,
+        )
 
     return handle

@@ -251,24 +251,6 @@ def _compute_changed(
         canon.unpersist()
 
 
-def _merge_changed(
-    index: ParquetTable, merge_rows: DataFrame, batch_id: int | None
-) -> None:
-    """Merge the slim index upserts — skipped entirely for an empty
-    set (a merge with no key bounds cannot prune and would rewrite
-    the whole index for a no-op batch; replay stays idempotent — an
-    empty fold has nothing a ledger entry would need to guard).
-    Retries commit conflicts: an out-of-band maintenance commit must
-    not kill the stream."""
-    if merge_rows.limit(1).count() > 0:
-        index.merge_with_retry(
-            merge_rows.select(*_INDEX_COLS),
-            keys=["curl"],
-            order_by=["doc_id"],
-            batch_id=batch_id,
-        )
-
-
 def fold_crawl_url_index(
     index: ParquetTable,
     pages: DataFrame,
@@ -293,9 +275,7 @@ def fold_crawl_url_index(
     rows are lost downstream forever. To maintain a derived table,
     use :func:`crawl_index_writer`, which commits derived tables
     BEFORE the index."""
-    out, merge_rows = _compute_changed(index, pages, url_col)
-    _merge_changed(index, merge_rows, batch_id)
-    return out
+    return fold_crawl_batch(index, pages, batch_id, url_col)
 
 
 def fold_crawl_batch(
@@ -333,15 +313,9 @@ def fold_crawl_batch(
         for entry in derived:
             table, tf = entry[0], entry[1]
             survives = entry[2] if len(entry) > 2 else None
-            # a transform may filter the batch to NOTHING: an empty
-            # merge has null key bounds → no manifest prunes → every
-            # live file rewrites for a no-op, AND the ledger records
-            # the batch_id, making a replayed real fold skip (the
-            # guard fold_edge_index documents — enforce it for EVERY
-            # derived table). With a survival predicate the probe
-            # runs over the CHECKPOINTED changed rows (cheap filter)
-            # instead of executing the transform kernel an extra
-            # time just to count (ADVICE r9).
+            # with a survival predicate, a batch nothing survives
+            # skips the transform kernel: the probe filters the
+            # CHECKPOINTED changed rows (ADVICE r9)
             if tf is None:
                 rows = changed
             elif survives is not None:
@@ -351,7 +325,10 @@ def fold_crawl_batch(
                 rows = tf(src)
             else:
                 rows = tf(changed)
-                if rows.limit(1).count() == 0:
+                # into a version-0 table an empty merge still commits
+                # (the bootstrap) and records batch_id; a transform
+                # that filtered everything must leave the id live
+                if table.current_version() == 0 and rows.limit(1).count() == 0:
                     continue
             table.merge_with_retry(
                 rows,
@@ -359,7 +336,14 @@ def fold_crawl_batch(
                 order_by=["doc_id"],
                 batch_id=batch_id,
             )
-    _merge_changed(index, merge_rows, batch_id)
+    # retried: an out-of-band maintenance commit must not kill the
+    # stream
+    index.merge_with_retry(
+        merge_rows.select(*_INDEX_COLS),
+        keys=["curl"],
+        order_by=["doc_id"],
+        batch_id=batch_id,
+    )
     return changed
 
 

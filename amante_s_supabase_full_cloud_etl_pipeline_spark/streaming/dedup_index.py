@@ -203,20 +203,11 @@ def near_dup_index_writer(
             id_col=id_col,
             batch_id=batch_id,
         )
-        # a pair-less batch skips the merge outright: an empty merge
-        # has null key bounds → nothing prunes → the whole pair table
-        # rewrites for a no-op (r10 review catch, the crawl-index
-        # guard; found is eagerly checkpointed, the probe is cheap)
-        if found.limit(1).count():
-            pairs.merge(
-                found,
-                keys=["id_a", "id_b"],
-                order_by=["id_a", "id_b"],
-                batch_id=batch_id,
-            )
-        elif pairs.current_version() == 0:
-            # bootstrap the schema so read() works on a dup-free
-            # stream (zero-row append — O(1), no rewrite)
-            pairs.append(found, batch_id=batch_id)
+        pairs.merge(
+            found,
+            keys=["id_a", "id_b"],
+            order_by=["id_a", "id_b"],
+            batch_id=batch_id,
+        )
 
     return handle

@@ -86,15 +86,11 @@ def fold_edge_index(
     batch_id: int | None = None,
 ) -> None:
     """Merge one batch of CHANGED winner pages into the edge table.
-    Exactly-once under replay via ``batch_id``; an empty batch merges
-    nothing (a boundless merge would rewrite the whole table for a
-    no-op) — probed on ``changed`` filtered by the transform's own
-    row-survival predicate (non-null doc_id and curl; the kernel
-    emits exactly one row per surviving input row), so the probe
-    never runs the html kernel just to count AND never commits a
-    batch_id for a merge the transform filtered down to nothing —
-    an empty commit would both rewrite the whole table for a no-op
-    and make the ledger skip a later REAL fold reusing the id.
+    Exactly-once under replay via ``batch_id``. A batch with no
+    surviving page skips the html kernel: the probe filters
+    ``changed`` by the transform's own row-survival predicate
+    (non-null doc_id and curl; the kernel emits exactly one row per
+    surviving input row).
 
     COMMIT-ORDER WARNING: in an at-least-once context this merge must
     commit BEFORE the seen-index does — the batch's ``changed`` rows

@@ -208,8 +208,7 @@ def image_index_writer(
     """``foreachBatch`` handler maintaining index AND candidate-pair
     table exactly-once — the audio/video writer semantics: pairs
     merge on (id_a, id_b) (distances are deterministic per pair, so
-    replays converge); pair-less batches skip the merge but
-    bootstrap the table schema once."""
+    replays converge)."""
 
     def handle(batch: DataFrame, batch_id: int) -> None:
         if compact_at_files and len(index.files()) >= compact_at_files:
@@ -223,14 +222,11 @@ def image_index_writer(
             probe_bits=probe_bits,
             max_posting=max_posting,
         )
-        if found.limit(1).count():
-            pairs.merge(
-                found,
-                keys=["id_a", "id_b"],
-                order_by=["dhash_hamming"],
-                batch_id=batch_id,
-            )
-        elif pairs.current_version() == 0:
-            pairs.append(found, batch_id=batch_id)
+        pairs.merge(
+            found,
+            keys=["id_a", "id_b"],
+            order_by=["dhash_hamming"],
+            batch_id=batch_id,
+        )
 
     return handle

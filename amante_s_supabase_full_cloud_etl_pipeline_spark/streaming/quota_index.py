@@ -203,16 +203,14 @@ def _compute_delta(
 
 
 def _merge_slots(
-    index: ParquetTable, slot_diff: DataFrame, batch_id: int | None,
-    known_nonempty: bool = False,
+    index: ParquetTable, slot_diff: DataFrame, batch_id: int | None
 ) -> None:
-    if known_nonempty or slot_diff.limit(1).count() > 0:
-        index.merge_with_retry(
-            slot_diff.select(*_INDEX_COLS),
-            keys=["site", "rank"],
-            order_by=["key"],
-            batch_id=batch_id,
-        )
+    index.merge_with_retry(
+        slot_diff.select(*_INDEX_COLS),
+        keys=["site", "rank"],
+        order_by=["key"],
+        batch_id=batch_id,
+    )
 
 
 def fold_quota_index(
@@ -293,14 +291,14 @@ def quota_index_writer(
         if slot_diff.limit(1).count() == 0:
             return  # no-op / replayed batch
         if admitted_table is not None:
-            adm = delta.filter(F.col("change") == "admitted")
-            if adm.limit(1).count() > 0:
-                admitted_table.merge_with_retry(
-                    adm.select("site", "key", "url"),
-                    keys=["url"],
-                    order_by=["key"],
-                    batch_id=batch_id,
-                )
+            admitted_table.merge_with_retry(
+                delta.filter(F.col("change") == "admitted").select(
+                    "site", "key", "url"
+                ),
+                keys=["url"],
+                order_by=["key"],
+                batch_id=batch_id,
+            )
             # evictions stream through the driver in bounded
             # chunks (toLocalIterator holds ONE partition at a time,
             # never the whole list) — an arbitrarily displacing batch
@@ -323,6 +321,6 @@ def quota_index_writer(
                 admitted_table.delete_where_with_retry(
                     [("url", "in", chunk)]
                 )
-        _merge_slots(index, slot_diff, batch_id, known_nonempty=True)
+        _merge_slots(index, slot_diff, batch_id)
 
     return handle

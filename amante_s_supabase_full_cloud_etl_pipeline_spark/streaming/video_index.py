@@ -107,9 +107,7 @@ def video_index_writer(
     table exactly-once — :func:`..streaming.audio_index.
     audio_index_writer` semantics: pairs merge on (doc_a, doc_b),
     latest observation wins (eligibility only shrinks, so later is
-    the more conservative count); pair-less batches skip the merge
-    (empty-merge full-rewrite guard) but bootstrap the table schema
-    once so consumers can read an empty table."""
+    the more conservative count)."""
 
     def handle(batch: DataFrame, batch_id: int) -> None:
         if compact_at_files and len(index.files()) >= compact_at_files:
@@ -123,14 +121,11 @@ def video_index_writer(
             every=every,
             sample_ms=sample_ms,
         )
-        if found.limit(1).count():
-            pairs.merge(
-                found,
-                keys=["doc_a", "doc_b"],
-                order_by=["shared_probes"],
-                batch_id=batch_id,
-            )
-        elif pairs.current_version() == 0:
-            pairs.append(found, batch_id=batch_id)
+        pairs.merge(
+            found,
+            keys=["doc_a", "doc_b"],
+            order_by=["shared_probes"],
+            batch_id=batch_id,
+        )
 
     return handle

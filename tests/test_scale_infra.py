@@ -321,3 +321,17 @@ def test_brute_force_ann_has_no_per_query_window(spark, sf_dir):
     assert "posexplode" in plan, plan[:3000]
     # the probe side is still broadcast into the corpus scan
     assert "BroadcastNestedLoopJoin" in plan or "BroadcastHashJoin" in plan
+
+
+def test_catalog_schema_cache_sees_in_place_rewrite(spark, tmp_path):
+    """A table directory rewritten in place with an extra column is
+    re-inferred, not served from the stale cached schema."""
+    path = str(tmp_path / "orders.parquet")
+    spark.range(3).selectExpr("id AS o_orderkey").write.parquet(path)
+    assert catalog.table(spark, str(tmp_path), "orders").columns == ["o_orderkey"]
+    spark.range(3).selectExpr("id AS o_orderkey", "id * 2 AS o_extra").write.mode(
+        "overwrite"
+    ).parquet(path)
+    got = catalog.table(spark, str(tmp_path), "orders")
+    assert got.columns == ["o_orderkey", "o_extra"]
+    assert sorted(r["o_extra"] for r in got.collect()) == [0, 2, 4]

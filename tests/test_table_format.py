@@ -237,6 +237,37 @@ def test_pos_pipeline_table_sinks_exactly_once(spark, tmp_path):
     assert fact_t.current_version() > v_fact
     assert fact_t.read().count() == n_fact
 
+    # a clean day: only valid orders, so the quarantine sink gets a
+    # zero-row batch and must not commit; the fact sink still advances
+    v_fact, v_quar = fact_t.current_version(), quar_t.current_version()
+    quar_files = quar_t.files()
+    handle(raw.filter("`Order ID` IN ('O1', 'O2')"), 3)
+    assert quar_t.current_version() == v_quar
+    assert quar_t.files() == quar_files
+    assert fact_t.current_version() > v_fact
+
+
+def test_empty_merge_is_a_noop_except_at_version_zero(spark, tmp_path):
+    """A zero-row merge at version >= 1 follows delete_where's no-op
+    rule: same version, same files, and no ledger entry, so a later
+    real batch reusing the id still applies. Into a version-0 table
+    it commits, so the table is readable with the batch's schema."""
+    table = ParquetTable(spark, str(tmp_path / "t"))
+    for lo in (0, 10, 20):
+        table.append(_df(spark, [(k, "x", k) for k in range(lo, lo + 10)]))
+    v, files = table.current_version(), table.files()
+    assert table.merge(_df(spark, []), KEYS, ORDER, batch_id=7) == v
+    assert table.files() == files
+    assert table.merge(_df(spark, [(5, "NEW", 99)]), KEYS, ORDER, batch_id=7) == v + 1
+    got = {(r["k"], r["v"]) for r in table.read().collect()}
+    assert got == {(k, "NEW" if k == 5 else "x") for k in range(30)}
+
+    fresh = ParquetTable(spark, str(tmp_path / "fresh"))
+    empty = spark.createDataFrame([], "k int, score double, ts int")
+    assert fresh.merge(empty, KEYS, ORDER, batch_id=0) == 1
+    assert fresh.read().dtypes == [("k", "int"), ("score", "double"), ("ts", "int")]
+    assert fresh.read().count() == 0
+
 
 # -- manifest stats, file skipping, pruned MERGE ---------------------------
 
