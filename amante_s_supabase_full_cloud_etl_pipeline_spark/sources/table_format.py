@@ -114,7 +114,7 @@ import uuid
 from collections.abc import Callable, Sequence
 from decimal import Decimal
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.upsert import dedup_latest, merge_upsert
@@ -1013,12 +1013,12 @@ class ParquetTable:
         parent = self.current_version()
         if self._already_applied(batch_id, parent):
             return parent
-        batch = dedup_latest(prepare_for_load(batch), keys, order_by)
-        schema_json, evolved = self._evolved(parent, batch)
-        if evolved is not None:
-            batch = _align(batch, evolved)
+        batch = prepare_for_load(batch)
         key_filters = None
         if parent > 0:
+            # Bounds of the batch BEFORE dedup: dedup keeps at least one
+            # row per key, so the count's sign and the key range are the
+            # same, and this job skips the dedup window's shuffle.
             bounds = batch.agg(
                 F.count(F.lit(1)).alias("n"),
                 F.min(keys[0]).alias("lo"),
@@ -1031,6 +1031,10 @@ class ParquetTable:
                     (keys[0], ">=", bounds["lo"]),
                     (keys[0], "<=", bounds["hi"]),
                 ]
+        batch = dedup_latest(batch, keys, order_by)
+        schema_json, evolved = self._evolved(parent, batch)
+        if evolved is not None:
+            batch = _align(batch, evolved)
 
         def upsert(target: DataFrame) -> DataFrame:
             if evolved is not None:
@@ -1208,11 +1212,16 @@ class ParquetTable:
         byte-identically by compaction or an untouched-range rewrite
         are suppressed, so compaction produces an EMPTY change feed.
 
+        The keyed feed is ONE full outer join of the two sides on
+        ``keys``: each side is projected to its keys, its row and a
+        fingerprint of its non-key columns, and every joined row emits
+        the images its presence and fingerprints call for (none for a
+        byte-identical rewrite), so each side is scanned once.
+
         PRECONDITION for keyed semantics: the table is key-unique
         (built via ``merge``, which dedups). On an append-built table
-        with duplicate keys the inner/anti joins below produce
-        cross-products and inflated update images — use the unkeyed
-        feed there.
+        with duplicate keys the join produces cross-products and
+        inflated update images — use the unkeyed feed there.
 
         Schema guard: both diff sides read with the NEWER manifest's
         schema, which is only sound for additive evolution. A
@@ -1284,35 +1293,37 @@ class ParquetTable:
             return tag(df_rem, "delete")
         if df_rem is None:
             return tag(df_add, "insert")
-        value_cols = [c for c in df_add.columns if c not in keys]
-        # explicit-null JSON: injective over the fixed schema (a null
-        # and any real value can never serialize identically)
-        fp = lambda df: df.withColumn(  # noqa: E731
-            "_fp",
-            F.xxhash64(
-                F.to_json(
-                    F.struct(*value_cols), {"ignoreNullFields": "false"}
-                )
-            ),
-        )
-        add_fp, rem_fp = fp(df_add), fp(df_rem)
-        inserts = tag(df_add.join(df_rem.select(keys), keys, "left_anti"), "insert")
-        deletes = tag(df_rem.join(df_add.select(keys), keys, "left_anti"), "delete")
-        def changed(side: DataFrame, other: DataFrame, label: str) -> DataFrame:
-            return tag(
-                side.join(
-                    other.select(*keys, F.col("_fp").alias("_fp_other")),
-                    keys,
-                    "inner",
-                )
-                .filter(F.col("_fp") != F.col("_fp_other"))
-                .drop("_fp", "_fp_other"),
-                label,
+        cols = df_add.columns
+        value_cols = [c for c in cols if c not in keys]
+
+        def side(df: DataFrame, name: str) -> DataFrame:
+            # explicit-null JSON: injective over the fixed schema (a
+            # null and any real value can never serialize identically)
+            fp = F.xxhash64(
+                F.to_json(F.struct(*value_cols), {"ignoreNullFields": "false"})
+            )
+            return df.select(*keys, F.struct(*cols).alias(name), fp.alias(f"{name}_fp"))
+
+        # One full outer join on the keys: a side is absent exactly
+        # when its fingerprint (never null) is null.
+        j = side(df_add, "_new").join(side(df_rem, "_old"), keys, "full_outer")
+        has_new, has_old = F.col("_new_fp").isNotNull(), F.col("_old_fp").isNotNull()
+        updated = has_new & has_old & (F.col("_new_fp") != F.col("_old_fp"))
+
+        def image(name: str, label: str, when: Column) -> Column:
+            row = F.col(name)
+            return F.when(
+                when,
+                F.struct(*[row[c].alias(c) for c in cols], F.lit(label).alias("_change_type")),
             )
 
-        post = changed(add_fp, rem_fp, "update_postimage")
-        pre = changed(rem_fp, add_fp, "update_preimage")
-        return inserts.unionByName(post).unionByName(pre).unionByName(deletes)
+        events = F.array(
+            image("_new", "insert", has_new & ~has_old),
+            image("_new", "update_postimage", updated),
+            image("_old", "update_preimage", updated),
+            image("_old", "delete", has_old & ~has_new),
+        )
+        return j.select(F.inline(F.filter(events, lambda e: e.isNotNull())))
 
     # -- maintenance --------------------------------------------------------
 

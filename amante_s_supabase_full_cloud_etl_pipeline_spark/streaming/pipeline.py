@@ -123,6 +123,10 @@ def pos_table_handler(
     production shape: concurrent dashboard readers keep their pinned
     snapshot while a micro-batch commits.
 
+    Replay stays exactly-once because each table keeps its own
+    ``batch_id`` ledger: a replay after a half-committed batch skips
+    the sink that committed and re-applies only the other.
+
     ``views`` — optional
     :class:`~..sources.materialized.IncrementalAggView`s over the fact
     table, refreshed after each commit (the reference fires its ELT

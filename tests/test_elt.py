@@ -5,6 +5,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from amante_s_supabase_full_cloud_etl_pipeline_spark.operators import star
 from amante_s_supabase_full_cloud_etl_pipeline_spark.operators.star import (
     build_dim,
     pos_dims_from_fact,
@@ -42,6 +43,48 @@ def test_resolve_star_joins_back_losslessly(spark):
     back = resolved.join(items_dim, "items_key", "left")
     assert back.filter(F.col("items").isNull()).count() == 0
     fact.unpersist()
+
+
+def _resolved_rows(staging, dims):
+    resolved, quarantine = resolve_star(staging, dims)
+    return (
+        resolved.columns,
+        quarantine.columns,
+        sorted(map(tuple, resolved.collect()), key=repr),
+        sorted(map(tuple, quarantine.collect()), key=repr),
+    )
+
+
+def test_pos_dims_above_row_bound_join_lazily_with_same_output(spark, monkeypatch):
+    """Forcing test for the eager dims' row bound: with the bound below
+    the distinct (attribute, value) count, the dims are lazy and
+    joined, and resolve gives the fast path's rows, quarantine
+    included (dims built without one category, so its rows miss)."""
+    fact = transform_pos(raw_pos_df(spark), spark).cache()
+    gone = fact.where(F.col("category").isNotNull()).first()["category"]
+    source = fact.where(F.col("category") != gone)
+    fast = pos_dims_from_fact(source)
+    assert all(d in star._ON_DRIVER for d in fast.values())
+    pairs = sum(len(star._ON_DRIVER[d]) for d in fast.values())
+    monkeypatch.setattr(star, "POS_DIM_MAX_ROWS", pairs - 1)
+    slow = pos_dims_from_fact(source)
+    assert not any(d in star._ON_DRIVER for d in slow.values())
+    want = _resolved_rows(fact, fast)
+    assert want[3], "the missing category must quarantine rows"
+    assert _resolved_rows(fact, slow) == want
+    fact.unpersist()
+
+
+def test_driver_dim_with_duplicate_natural_key_is_joined(spark, monkeypatch):
+    """A driver dim whose natural key repeats takes the join path,
+    which keeps the join's row multiplicity."""
+    staging = spark.createDataFrame([("a", 1), ("b", 2), ("c", 3)], "items string, n int")
+    rows = [("a", 10), ("a", 11), ("b", 20)]
+    dim = spark.createDataFrame(rows, "items string, items_key long")
+    monkeypatch.setitem(star._ON_DRIVER, dim, rows)
+    resolved, quarantine = resolve_star(staging, {"items": dim})
+    assert sorted(map(tuple, resolved.collect())) == [(1, 10), (1, 11), (2, 20)]
+    assert [tuple(r) for r in quarantine.collect()] == [("c", 3, None)]
 
 
 def test_merge_upsert_idempotent(spark):

@@ -6,6 +6,7 @@ around for 100 TB (SURVEY.md §7 step 8)."""
 from __future__ import annotations
 
 import pytest
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from amante_s_supabase_full_cloud_etl_pipeline_spark import catalog
@@ -335,3 +336,25 @@ def test_catalog_schema_cache_sees_in_place_rewrite(spark, tmp_path):
     got = catalog.table(spark, str(tmp_path), "orders")
     assert got.columns == ["o_orderkey", "o_extra"]
     assert sorted(r["o_extra"] for r in got.collect()) == [0, 2, 4]
+
+
+def test_codegen_cache_keeps_a_plan_compiled_across_many_others(spark):
+    """The session's codegen cache outlives Spark's default 100 classes:
+    a query rerun after 120 other classes were compiled (one union of 60
+    distinct projections, two classes each) is served from the cache
+    and compiles nothing."""
+    from functools import reduce
+
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+
+    def first():
+        spark.range(10).select((F.col("id") * 7).alias("x")).where("x > 3").collect()
+
+    first()
+    reduce(
+        DataFrame.union,
+        [spark.range(0, 1, 1, 1).select((F.col("id") + F.lit(i)).alias("x")) for i in range(60)],
+    ).collect()
+    before = compiles.METRIC_COMPILATION_TIME().getCount()
+    first()
+    assert compiles.METRIC_COMPILATION_TIME().getCount() == before

@@ -247,6 +247,49 @@ def test_pos_pipeline_table_sinks_exactly_once(spark, tmp_path):
     assert fact_t.current_version() > v_fact
 
 
+def test_pos_pipeline_replay_after_one_sink_failed(spark, tmp_path, monkeypatch):
+    """When the quarantine MERGE fails the handler raises, the fact
+    MERGE having committed; a replay of the batch re-applies only the
+    quarantine sink, so both tables equal a clean single run and the
+    fact table holds exactly one data commit for the batch."""
+    from amante_s_supabase_full_cloud_etl_pipeline_spark.plans.pos_fixture import (
+        raw_pos_df,
+    )
+    from amante_s_supabase_full_cloud_etl_pipeline_spark.streaming.pipeline import (
+        pos_table_handler,
+    )
+
+    raw = raw_pos_df(spark)
+    clean_fact = ParquetTable(spark, str(tmp_path / "clean_fact"))
+    clean_quar = ParquetTable(spark, str(tmp_path / "clean_quar"))
+    pos_table_handler(clean_fact, clean_quar)(raw, 0)
+
+    fact_t = ParquetTable(spark, str(tmp_path / "fact"))
+    quar_t = ParquetTable(spark, str(tmp_path / "quar"))
+    real_merge = quar_t.merge
+    calls = []
+
+    def merge_failing_once(*args, **kwargs):
+        calls.append(args)
+        if len(calls) == 1:
+            raise RuntimeError("quarantine sink down")
+        return real_merge(*args, **kwargs)
+
+    monkeypatch.setattr(quar_t, "merge", merge_failing_once)
+    handle = pos_table_handler(fact_t, quar_t)
+    with pytest.raises(RuntimeError, match="quarantine sink down"):
+        handle(raw, 0)
+    assert quar_t.current_version() == 0
+    handle(raw, 0)  # the replay
+
+    def rows(t):
+        return sorted(map(tuple, t.read().collect()), key=repr)
+
+    assert rows(fact_t) == rows(clean_fact)
+    assert rows(quar_t) == rows(clean_quar)
+    assert [e["batch_id"] for e in fact_t.history()] == [0]
+
+
 def test_empty_merge_is_a_noop_except_at_version_zero(spark, tmp_path):
     """A zero-row merge at version >= 1 follows delete_where's no-op
     rule: same version, same files, and no ledger entry, so a later
@@ -740,18 +783,20 @@ def test_history_is_metadata_only_commit_log(spark, table):
 
 def test_keyed_change_feed_matches_model_between_random_versions(spark, tmp_path):
     """Hypothesis drives random merge/overwrite sequences (key-unique
-    by construction — the keyed feed's precondition) with manifest
-    folding forced on, records the model state at every version, then
-    checks changes(v_i, v_j, keys) classification against the model
-    diff for random version pairs: inserts/deletes/update images must
-    match exactly, and same-state pairs must produce an empty feed."""
+    by construction — the keyed feed's precondition; values include
+    null, so updates to and from null occur) with manifest folding
+    forced on, records the model state at every version, then checks
+    changes(v_i, v_j, keys) classification against the model diff for
+    random version pairs: inserts/deletes/update images must match
+    exactly, and same-state pairs must produce an empty feed. A fixed
+    case then re-merges a row byte for byte: that feed is empty."""
     import tempfile
 
     from hypothesis import HealthCheck, given, settings
     from hypothesis import strategies as st
 
     rows_st = st.lists(
-        st.tuples(st.integers(0, 6), st.sampled_from("abc")),
+        st.tuples(st.integers(0, 6), st.sampled_from(["a", "b", "c", None])),
         min_size=1,
         max_size=4,
     )
@@ -812,6 +857,15 @@ def test_keyed_change_feed_matches_model_between_random_versions(spark, tmp_path
             assert not feed
 
     run()
+
+    # a byte-identical re-merge of a null-valued row rewrites its file,
+    # and the feed of that commit is empty
+    table = ParquetTable(spark, str(tmp_path / "remerge"))
+    table.merge(_df(spark, [(1, "a", 1), (2, None, 2)]), KEYS, ORDER)
+    v = table.current_version()
+    table.merge(_df(spark, [(2, None, 2)]), KEYS, ORDER)
+    assert table.current_version() == v + 1
+    assert not table.changes(v, keys=KEYS).collect()
 
 
 # -- DELETE WHERE ----------------------------------------------------------
