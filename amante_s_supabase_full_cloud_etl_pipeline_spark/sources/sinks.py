@@ -1,115 +1,39 @@
 """Keyed upsert sinks (SURVEY.md S5/S6 — the reference's Supabase
 ``upsert`` calls, ref main.py:50,85).
 
-Two write paths with identical semantics:
-
-- :func:`parquet_merge_write` — lakehouse-local: read current target,
-  MERGE in the batch (operators.upsert), write the merged table to a
-  temp directory and atomically swap it in. Used by tests and the
-  local streaming pipeline.
 - :func:`jdbc_upsert_writer` — a ``foreachBatch`` body issuing
   batched ``INSERT ... ON CONFLICT (keys) DO UPDATE`` against
   PostgreSQL, one DBAPI connection per non-empty partition. The
   connection factory is injectable (contract-tested with a fake
   DBAPI); the default factory needs psycopg2 and fails FAST on the
   driver when it is absent — never silently per-partition.
+- :func:`prepare_for_load` — the load-time hygiene the reference
+  applies before writing: sanitized column names (P2, ref main.py:30)
+  and NaN/Inf scrubbed to null (F16, ref main.py:41-45). The JDBC
+  sink and :mod:`.table_format` both apply it.
 
-Both paths sanitize column names (P2, ref main.py:30) and scrub
-NaN/Inf to null (F16, ref main.py:41-45) before writing — the same
-load-time hygiene the reference applies.
+Parquet upserts are :meth:`.table_format.ParquetTable.merge`: a
+snapshot-isolated MERGE commit, idempotent per ``batch_id``.
 
-Scale notes (100 TB): the parquet swap is a local-FS stand-in for a
-table format's transactional commit (Delta/Iceberg MERGE INTO);
-writing the merged output to a DIFFERENT directory than the one being
-read removes the self-overwrite recompute hazard entirely — no cache
-barrier needed. The JDBC path opens one connection per partition and
-skips empty partitions, so a 1000-executor job with mostly-empty
-shuffle partitions does not stampede the database; batch size bounds
-per-roundtrip memory.
+Scale notes (100 TB): the JDBC path opens one connection per
+partition and skips empty partitions, so a 1000-executor job with
+mostly-empty shuffle partitions does not stampede the database; batch
+size bounds per-roundtrip memory.
 """
 
 from __future__ import annotations
 
 import itertools
-import os
-import shutil
-import uuid
 from collections.abc import Callable, Sequence
 
 from pyspark.sql import DataFrame
 
 from ..functions.cleaning import sanitize_columns, scrub_doubles
-from ..operators.upsert import dedup_latest, merge_upsert
 
 
 def prepare_for_load(df: DataFrame) -> DataFrame:
     """P2 + F16: sink-side column sanitize and NaN/Inf scrub."""
     return scrub_doubles(sanitize_columns(df))
-
-
-# --------------------------------------------------------------------------
-# parquet MERGE sink
-# --------------------------------------------------------------------------
-
-
-def _local_dir(path: str) -> str:
-    """Strip a file: scheme so os-level checks/renames work on the
-    local paths this sink targets (cluster deployments use a table
-    format instead of this sink — see module notes)."""
-    if path.startswith("file://"):
-        return path[len("file://") :]
-    if path.startswith("file:"):
-        return path[len("file:") :]
-    return path
-
-
-def _swap_dirs(tmp: str, target: str) -> None:
-    """Atomically (per-rename) promote ``tmp`` to ``target``.
-
-    Order: back up the current target, rename tmp into place, drop
-    the backup. A crash between the two renames leaves the previous
-    table intact under ``<target>.old-*`` for manual recovery — never
-    a half-written target.
-    """
-    tmp, target = _local_dir(tmp), _local_dir(target)
-    backup = None
-    if os.path.exists(target):
-        backup = f"{target}.old-{uuid.uuid4().hex}"
-        os.rename(target, backup)
-    os.rename(tmp, target)
-    if backup is not None:
-        shutil.rmtree(backup, ignore_errors=True)
-
-
-def parquet_merge_write(
-    target_path: str,
-    batch: DataFrame,
-    keys: Sequence[str],
-    order_by: Sequence[str],
-) -> None:
-    """Idempotent keyed upsert into a parquet target (MERGE-equivalent
-    anti-join + union; Delta/Iceberg MERGE INTO at scale).
-
-    The merged output is written to ``<target>.tmp-<id>`` while the
-    current table is still being read lazily from ``target_path`` —
-    reader and writer never share a directory, so there is no
-    cache-eviction/self-overwrite hazard — then swapped in with
-    directory renames. Any failure before the swap leaves the
-    existing target untouched.
-    """
-    spark = batch.sparkSession
-    batch = dedup_latest(prepare_for_load(batch), keys, order_by)
-    if os.path.exists(_local_dir(target_path)):
-        current = spark.read.parquet(target_path)
-        merged = merge_upsert(current, batch, keys)
-    else:  # first write: no target yet (only this case, not any error)
-        merged = batch
-    tmp = f"{target_path}.tmp-{uuid.uuid4().hex}"
-    try:
-        merged.write.mode("overwrite").parquet(tmp)
-        _swap_dirs(tmp, target_path)
-    finally:
-        shutil.rmtree(_local_dir(tmp), ignore_errors=True)
 
 
 # --------------------------------------------------------------------------

@@ -2,11 +2,11 @@
 protocol over plain parquet — no table-format libraries in this
 container, so the engine carries its own).
 
-Why ``parquet_merge_write``'s directory swap is not enough at scale:
-a reader that planned against the target directory can lose files
-mid-query when the swap replaces them. Real lakehouse formats fix
-this with IMMUTABLE data files + a versioned metadata pointer; this
-module implements exactly that core:
+Why rewriting a table elsewhere and renaming it into place is not
+enough at scale: a reader that planned against the target directory
+can lose files mid-query when the swap replaces them. Real lakehouse
+formats fix this with IMMUTABLE data files + a versioned metadata
+pointer; this module implements exactly that core:
 
 Layout (two-level, Iceberg-style)::
 

@@ -12,15 +12,17 @@ Reference contract being replaced:
   (README.md:125) → ``Trigger.AvailableNow``.
 - S5/S6 dual upsert sinks → ``foreachBatch`` running the kernel once
   per micro-batch, splitting clean/quarantine from one cached
-  evaluation, and writing both targets idempotently per batch.
+  evaluation, and MERGing both into snapshot-isolated
+  ``ParquetTable`` sinks keyed on ``FACT_KEYS``.
 
 Delivery semantics: ``foreachBatch`` is AT-LEAST-ONCE (a crash after
-a sink write but before the checkpoint commit replays the batch), so
-each sink write is made idempotent by partitioning on ``_batch_id``
-with dynamic partition overwrite — a replayed batch overwrites its own
-partition instead of appending duplicates. At-least-once replay +
-idempotent per-batch write = exactly-once observable state, the same
-construction a transactional table format gives you at scale.
+a sink commit but before the checkpoint commit replays the batch).
+Each table records the ``batch_id`` of every commit in its manifest
+ledger, so a replayed batch is a no-op on the sink that already
+committed it; and the write itself is a keyed MERGE, so even a replay
+the ledger cannot see (a lost checkpoint re-reading old files) or a
+re-sent order upserts instead of duplicating. At-least-once replay +
+idempotent keyed commit = exactly-once observable state.
 
 At scale the landing dir is object storage; file listing cost is
 bounded by ``maxFilesPerTrigger`` and the checkpoint's seen-file log.
@@ -44,68 +46,9 @@ from ..operators.validate import validation_split
 from ..plans.pos_fixture import RAW_SCHEMA
 from ..plans.pos_kernel import transform_pos
 
-BatchHandler = Callable[[DataFrame, DataFrame, int], None]
-
-
-def read_pos_stream(
-    spark: SparkSession,
-    landing_dir: str,
-    max_files_per_trigger: int = 100,
-    archive_dir: Optional[str] = None,
-) -> DataFrame:
-    """File-source stream over a CSV landing dir (the xlsx→landing
-    conversion is sources.xlsx_shim; the engine standardizes on
-    CSV/parquet landing, SURVEY.md S3)."""
-    reader = (
-        spark.readStream.schema(RAW_SCHEMA)
-        .option("header", "true")
-        .option("maxFilesPerTrigger", str(max_files_per_trigger))
-    )
-    if archive_dir:
-        reader = reader.option("cleanSource", "archive").option(
-            "sourceArchiveDir", archive_dir
-        )
-    return reader.csv(landing_dir)
-
-
-def _write_idempotent(df: DataFrame, target: str, batch_id: int) -> None:
-    """Idempotent per-batch parquet write: the batch lands in its own
-    ``_batch_id`` partition via dynamic partition overwrite, so an
-    at-least-once replay of the same micro-batch replaces its partition
-    rather than appending duplicates. Other batches' partitions are
-    untouched (dynamic mode only overwrites partitions present in the
-    written data)."""
-    (
-        df.withColumn("_batch_id", F.lit(batch_id))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("_batch_id")
-        .parquet(target)
-    )
-
-
-def pos_batch_handler(fact_dir: str, quarantine_dir: str) -> Callable[[DataFrame, int], None]:
-    """The ``foreachBatch`` body: kernel → validation split → two
-    idempotent per-batch sink writes from one cached evaluation.
-    Exposed for direct replay/crash testing."""
-
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():  # A3 emptiness gate (ref main.py:456,460)
-            return
-        ts = batch_df.sparkSession
-        fact = transform_pos(
-            batch_df.withColumn("Payment time", F.col("`Payment time`").cast("timestamp")),
-            ts,
-        ).cache()
-        try:
-            clean, quarantine = validation_split(fact)
-            _write_idempotent(clean, fact_dir, batch_id)
-            _write_idempotent(quarantine, quarantine_dir, batch_id)
-        finally:
-            fact.unpersist()
-
-    return handle
-
+#: files per micro-batch: bounds each batch's size and the landing
+#: dir's listing cost
+MAX_FILES_PER_TRIGGER = 100
 
 #: the fact table's explicit upsert key (SURVEY.md §7 risk register:
 #: explode destroys pandas row identity, so the engine must name one;
@@ -116,12 +59,11 @@ FACT_KEYS = ("order_id", "items", "payment_time")
 def pos_table_handler(
     fact_table, quarantine_table, views: Sequence = ()
 ) -> Callable[[DataFrame, int], None]:
-    """Transactional variant of :func:`pos_batch_handler`: both sinks
-    are :class:`~..sources.table_format.ParquetTable` MERGEs —
-    snapshot-isolated commits, and exactly-once via the table's
-    batch_id idempotency instead of partition overwrite. This is the
-    production shape: concurrent dashboard readers keep their pinned
-    snapshot while a micro-batch commits.
+    """The ``foreachBatch`` body: kernel → validation split → both
+    sinks as :class:`~..sources.table_format.ParquetTable` MERGEs from
+    one cached evaluation — snapshot-isolated commits, so concurrent
+    dashboard readers keep their pinned snapshot while a micro-batch
+    commits.
 
     Replay stays exactly-once because each table keeps its own
     ``batch_id`` ledger: a replay after a half-committed batch skips
@@ -158,56 +100,38 @@ def pos_table_handler(
     return handle
 
 
-def run_pos_pipeline(
-    spark: SparkSession,
-    landing_dir: str,
-    fact_dir: str,
-    quarantine_dir: str,
-    checkpoint_dir: str,
-    available_now: bool = True,
-    archive_dir: Optional[str] = None,
-):
-    """End-to-end streaming ETL: landing files → kernel → validation
-    split → two parquet sinks; checkpointed source progress plus
-    idempotent per-batch sink writes give exactly-once observable
-    state (see module notes on delivery semantics).
-
-    Returns the StreamingQuery (caller awaits termination)."""
-    raw = read_pos_stream(spark, landing_dir, archive_dir=archive_dir)
-
-    writer = (
-        raw.writeStream.foreachBatch(pos_batch_handler(fact_dir, quarantine_dir))
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
 def run_pos_pipeline_transactional(
     spark: SparkSession,
     landing_dir: str,
     fact_table,
     quarantine_table,
     checkpoint_dir: str,
-    available_now: bool = True,
     archive_dir: Optional[str] = None,
 ):
-    """The production variant of :func:`run_pos_pipeline`: sinks are
-    snapshot-isolated :class:`~..sources.table_format.ParquetTable`
-    MERGEs (exactly-once via per-batch_id idempotent commits), so
-    concurrent readers keep a consistent snapshot while micro-batches
-    land. Returns the StreamingQuery."""
-    raw = read_pos_stream(spark, landing_dir, archive_dir=archive_dir)
-    writer = (
-        raw.writeStream.foreachBatch(pos_table_handler(fact_table, quarantine_table))
+    """End-to-end streaming ETL, drain-and-exit: every CSV file in the
+    landing dir (the xlsx→landing conversion is sources.xlsx_shim; the
+    engine standardizes on CSV/parquet landing, SURVEY.md S3) → kernel
+    → validation split → MERGE into the fact and quarantine tables
+    (see module notes on delivery semantics). ``archive_dir`` moves
+    consumed files there (the S9 marker). Returns the StreamingQuery
+    (caller awaits termination)."""
+    reader = (
+        spark.readStream.schema(RAW_SCHEMA)
+        .option("header", "true")
+        .option("maxFilesPerTrigger", str(MAX_FILES_PER_TRIGGER))
+    )
+    if archive_dir:
+        reader = reader.option("cleanSource", "archive").option(
+            "sourceArchiveDir", archive_dir
+        )
+    return (
+        reader.csv(landing_dir)
+        .writeStream.foreachBatch(pos_table_handler(fact_table, quarantine_table))
         .option("checkpointLocation", checkpoint_dir)
         .outputMode("update")
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def write_landing_csv(df: DataFrame, landing_dir: str, name: str) -> str:

@@ -661,6 +661,32 @@ def _extra_queries():
     }
 
 
+def query_fn(name: str):
+    """The callable building bench row ``name`` — the one resolver
+    :func:`run` and ``tools/`` share (call ``registry.load_all_queries``
+    first). :func:`_extra_queries` takes precedence: where a registry
+    row is a consolidated/extended slot (labeled unions;
+    crawl_front_half carrying the centrality column since r9), the
+    bench keeps timing the NARROW per-operator shape under the same
+    name so cross-round numbers stay comparable. An extra row releases
+    the previous row's tracked persists first, the same cache
+    lifecycle as the registry wrapper. The callable returns a frame or
+    a per-pass frame builder (see ``force`` in :func:`run`)."""
+    inner = _extra_queries().get(name)
+    if inner is None:
+        return registry.QUERIES[name]
+
+    def wrapped(spark, sf_dir):
+        from amante_s_supabase_full_cloud_etl_pipeline_spark.operators.cache import (
+            release_tracked,
+        )
+
+        release_tracked()
+        return inner(spark, sf_dir)
+
+    return wrapped
+
+
 def pagerank_throughput(spark, sf_dir: str) -> tuple[float, float]:
     """(min_sec, spread_sec) over 3 timed passes of PageRank on a
     deterministic power-law graph sized by the sf's documents count
@@ -753,32 +779,6 @@ def run() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = get_spark("amante-bench")
     registry.load_all_queries()
-    extra = _extra_queries()
-
-    def query_fn(name: str):
-        # _extra_queries takes precedence: where a registry row is a
-        # consolidated/extended slot (labeled unions; crawl_front_half
-        # carrying the centrality column since r9), the bench keeps
-        # timing the NARROW per-operator shape under the same name so
-        # cross-round numbers stay comparable
-        inner = extra.get(name)
-        if inner is None:
-            fn = registry.QUERIES.get(name)
-            if fn is not None:
-                return fn
-            raise KeyError(name)
-
-        def wrapped(spark_, sf_dir_):
-            # same cache lifecycle as the registry wrapper: release
-            # the previous query's tracked persists before running
-            from amante_s_supabase_full_cloud_etl_pipeline_spark.operators.cache import (
-                release_tracked,
-            )
-
-            release_tracked()
-            return inner(spark_, sf_dir_)
-
-        return wrapped
 
     def force(name: str) -> tuple[float, float]:
         fn = query_fn(name)
@@ -788,8 +788,9 @@ def run() -> None:
         # per-pass frame BUILDER. A builder means fn itself ran the
         # row's untimed setup and each pass rebuilds only the
         # measured frame. Every caller (here, tools/bench_one.py,
-        # tools/profile_row.py, tools/explain_one.py) tells the two
-        # apart by callable(built); rows carry no flag.
+        # tools/profile_row.py, tools/explain_one.py,
+        # tools/dump_plans.py) tells the two apart by callable(built);
+        # rows carry no flag.
         mk = built if callable(built) else None
         # warm-up pass: pays one-off Catalyst/codegen/JIT compile
         (mk() if mk else built).write.mode("overwrite").format(

@@ -2,14 +2,16 @@
 
 What the reference does with Drive + pandas + Supabase + a stored
 procedure (ref /root/reference/main.py), this script does with a
-landing dir + one Catalyst plan + parquet MERGE + native star
-resolution:
+landing dir + one Catalyst plan + a keyed parquet-table MERGE + native
+star resolution:
 
     python examples/run_pos_etl.py [workdir]
 
 1. POS exports land as CSV (stand-in for the Drive folder).
 2. Streaming ETL (AvailableNow) drains the folder exactly-once:
-   kernel transform → validation split → fact + quarantine sinks.
+   kernel transform → validation split → MERGE into the fact and
+   quarantine ``ParquetTable``s (a re-sent order upserts, the
+   reference's ``ON CONFLICT`` contract).
 3. Star-schema ELT resolves dimensions (the RPC, natively).
 4. Dashboard KPIs run over the result.
 """
@@ -30,8 +32,9 @@ from amante_s_supabase_full_cloud_etl_pipeline_spark.operators.star import (
 )
 from amante_s_supabase_full_cloud_etl_pipeline_spark.plans.pos_fixture import raw_pos_df
 from amante_s_supabase_full_cloud_etl_pipeline_spark.session import get_spark
+from amante_s_supabase_full_cloud_etl_pipeline_spark.sources.table_format import ParquetTable
 from amante_s_supabase_full_cloud_etl_pipeline_spark.streaming.pipeline import (
-    run_pos_pipeline,
+    run_pos_pipeline_transactional,
     write_landing_csv,
 )
 
@@ -45,10 +48,14 @@ def main(workdir: str) -> None:
     write_landing_csv(raw_pos_df(spark), dirs["landing"], "pos_export_day1")
 
     # 2. drain the folder exactly-once
-    q = run_pos_pipeline(spark, dirs["landing"], dirs["fact"], dirs["quarantine"], dirs["ckpt"])
+    fact_t = ParquetTable(spark, dirs["fact"])
+    quarantine_t = ParquetTable(spark, dirs["quarantine"])
+    q = run_pos_pipeline_transactional(
+        spark, dirs["landing"], fact_t, quarantine_t, dirs["ckpt"]
+    )
     q.awaitTermination(120)
-    fact = spark.read.parquet(dirs["fact"])
-    quarantine = spark.read.parquet(dirs["quarantine"])
+    fact = fact_t.read()
+    quarantine = quarantine_t.read()
     print(f"fact rows: {fact.count()}, quarantined: {quarantine.count()}")
 
     # 3. ELT finish: resolve the star schema (the stored procedure, natively)

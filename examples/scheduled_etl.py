@@ -100,8 +100,11 @@ def main(argv: list[str]) -> int:
         return 3
 
     from amante_s_supabase_full_cloud_etl_pipeline_spark.session import get_spark
+    from amante_s_supabase_full_cloud_etl_pipeline_spark.sources.table_format import (
+        ParquetTable,
+    )
     from amante_s_supabase_full_cloud_etl_pipeline_spark.streaming.pipeline import (
-        run_pos_pipeline,
+        run_pos_pipeline_transactional,
         write_landing_csv,
     )
 
@@ -115,13 +118,13 @@ def main(argv: list[str]) -> int:
             write_landing_csv(
                 raw_pos_df(spark), dirs["landing"], "demo_export"
             )
-        q = run_pos_pipeline(
+        fact = ParquetTable(spark, dirs["fact"])
+        q = run_pos_pipeline_transactional(
             spark,
             dirs["landing"],
-            dirs["fact"],
-            dirs["quarantine"],
+            fact,
+            ParquetTable(spark, dirs["quarantine"]),
             dirs["ckpt"],
-            available_now=True,           # drain-and-exit
             archive_dir=dirs["archive"],  # S9 consumption marker
         )
         try:
@@ -137,10 +140,7 @@ def main(argv: list[str]) -> int:
             q.stop()
             print("drain did not finish within --timeout (2)")
             return 2
-        try:
-            n = spark.read.parquet(dirs["fact"]).count()
-        except Exception:
-            n = 0  # no batch has ever landed yet
+        n = fact.read().count() if fact.current_version() else 0
         print(f"drained; fact table now {n} rows (0)")
         return 0
     finally:

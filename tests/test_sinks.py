@@ -1,5 +1,5 @@
-"""Sink tests: atomic parquet MERGE write, and the JDBC upsert
-execution contract against a fake DBAPI connection (statements,
+"""Sink tests: load-time hygiene (``prepare_for_load``), and the JDBC
+upsert execution contract against a fake DBAPI connection (statements,
 batching, commit/rollback, idempotency on replay)."""
 
 from __future__ import annotations
@@ -13,68 +13,10 @@ import pytest
 from amante_s_supabase_full_cloud_etl_pipeline_spark.sources import sinks
 from amante_s_supabase_full_cloud_etl_pipeline_spark.sources.sinks import (
     jdbc_upsert_writer,
-    parquet_merge_write,
     prepare_for_load,
     upsert_conflict_sql,
     upsert_partition,
 )
-
-
-def test_parquet_merge_write_idempotent(spark, tmp_path):
-    target = str(tmp_path / "fact")
-    batch1 = spark.createDataFrame(
-        [(1, "a", 1.0, "2024-01-01"), (2, "b", 2.0, "2024-01-01")],
-        "k int, v string, amt double, d string",
-    )
-    parquet_merge_write(target, batch1, ["k"], ["d"])
-    assert spark.read.parquet(target).count() == 2
-
-    # replay the same batch → no duplicates (upsert semantics)
-    parquet_merge_write(target, batch1, ["k"], ["d"])
-    assert spark.read.parquet(target).count() == 2
-
-    # a restatement wins; new keys append
-    batch2 = spark.createDataFrame(
-        [(2, "B", 99.0, "2024-01-02"), (3, "c", 3.0, "2024-01-02")],
-        "k int, v string, amt double, d string",
-    )
-    parquet_merge_write(target, batch2, ["k"], ["d"])
-    rows = {r["k"]: r for r in spark.read.parquet(target).collect()}
-    assert set(rows) == {1, 2, 3}
-    assert rows[2]["v"] == "B" and rows[2]["amt"] == 99.0
-
-
-def test_parquet_merge_write_crash_keeps_old_target(spark, tmp_path, monkeypatch):
-    """A failure before/during the swap must leave the existing table
-    readable and complete — the write goes to a temp dir, never the
-    live target."""
-    target = str(tmp_path / "fact")
-    batch1 = spark.createDataFrame([(1, "a", "d1")], "k int, v string, d string")
-    parquet_merge_write(target, batch1, ["k"], ["d"])
-
-    def boom(tmp, tgt):
-        raise RuntimeError("crash before swap")
-
-    monkeypatch.setattr(sinks, "_swap_dirs", boom)
-    batch2 = spark.createDataFrame([(2, "b", "d2")], "k int, v string, d string")
-    with pytest.raises(RuntimeError):
-        parquet_merge_write(target, batch2, ["k"], ["d"])
-
-    # old target intact, temp dir cleaned up
-    rows = spark.read.parquet(target).collect()
-    assert [(r["k"], r["v"]) for r in rows] == [(1, "a")]
-    assert [p for p in os.listdir(tmp_path) if ".tmp-" in p] == []
-
-    monkeypatch.undo()
-    parquet_merge_write(target, batch2, ["k"], ["d"])
-    assert spark.read.parquet(target).count() == 2
-
-
-def test_parquet_merge_write_first_write_requires_no_target(spark, tmp_path):
-    target = str(tmp_path / "fresh")
-    batch = spark.createDataFrame([(1, "a", "d1")], "k int, v string, d string")
-    parquet_merge_write(target, batch, ["k"], ["d"])
-    assert spark.read.parquet(target).count() == 1
 
 
 def test_prepare_for_load_sanitizes_and_scrubs(spark):

@@ -1,5 +1,6 @@
 """End-to-end Structured Streaming tests: the file-drop POS ETL
-(exactly-once via checkpoint) and event-time windowed aggregations."""
+(exactly-once via checkpoint + keyed table MERGE) and event-time
+windowed aggregations."""
 
 from __future__ import annotations
 
@@ -10,7 +11,7 @@ from pyspark.sql import functions as F
 
 from amante_s_supabase_full_cloud_etl_pipeline_spark.plans.pos_fixture import raw_pos_df
 from amante_s_supabase_full_cloud_etl_pipeline_spark.streaming.pipeline import (
-    run_pos_pipeline,
+    run_pos_pipeline_transactional,
     write_landing_csv,
 )
 
@@ -25,81 +26,6 @@ def dirs(tmp_path):
     }
     os.makedirs(d["landing"], exist_ok=True)
     return d
-
-
-def _run(spark, dirs):
-    q = run_pos_pipeline(
-        spark,
-        dirs["landing"],
-        dirs["fact"],
-        dirs["quarantine"],
-        dirs["checkpoint"],
-        available_now=True,
-    )
-    q.awaitTermination(120)
-
-
-def test_pos_stream_end_to_end_and_exactly_once(spark, dirs):
-    write_landing_csv(raw_pos_df(spark), dirs["landing"], "batch1")
-    _run(spark, dirs)
-
-    fact = spark.read.parquet(dirs["fact"])
-    quarantine = spark.read.parquet(dirs["quarantine"])
-    assert fact.count() == 16  # kernel fixture: 17 line items, 1 quarantined
-    assert quarantine.count() == 1
-    assert quarantine.collect()[0]["order_id"] == "O9"
-
-    # Re-running with no new files must be a no-op (checkpointed
-    # exactly-once — the reference's archive-move marker, done right).
-    _run(spark, dirs)
-    assert spark.read.parquet(dirs["fact"]).count() == 16
-
-    # A new file arriving is picked up incrementally.
-    write_landing_csv(
-        raw_pos_df(spark).filter(F.col("`Order ID`") == "O1"), dirs["landing"], "batch2"
-    )
-    _run(spark, dirs)
-    assert spark.read.parquet(dirs["fact"]).count() == 18  # +2 line items
-
-
-def test_batch_handler_replay_and_midbatch_crash(spark, dirs, monkeypatch):
-    """foreachBatch is at-least-once: a crash between the clean and
-    quarantine writes replays the whole batch. The per-batch dynamic
-    partition overwrite must make that replay idempotent — no
-    duplicated fact rows."""
-    from amante_s_supabase_full_cloud_etl_pipeline_spark.streaming import pipeline
-
-    raw = raw_pos_df(spark)
-    handle = pipeline.pos_batch_handler(dirs["fact"], dirs["quarantine"])
-
-    # crash AFTER the clean write, BEFORE the quarantine write
-    real_write = pipeline._write_idempotent
-
-    def crash_on_quarantine(df, target, batch_id):
-        if target == dirs["quarantine"]:
-            raise RuntimeError("crash mid-batch")
-        real_write(df, target, batch_id)
-
-    monkeypatch.setattr(pipeline, "_write_idempotent", crash_on_quarantine)
-    with pytest.raises(RuntimeError):
-        handle(raw, 7)
-    assert spark.read.parquet(dirs["fact"]).count() == 16  # partial state on disk
-    monkeypatch.undo()
-
-    # replay of the SAME batch id (what the checkpoint would do)
-    handle(raw, 7)
-    fact = spark.read.parquet(dirs["fact"])
-    assert fact.count() == 16  # no duplicates from the replay
-    assert spark.read.parquet(dirs["quarantine"]).count() == 1
-
-    # replaying once more is still a no-op on observable state
-    handle(raw, 7)
-    assert spark.read.parquet(dirs["fact"]).count() == 16
-
-    # a NEW batch id appends alongside (other partitions untouched)
-    handle(raw.limit(0), 8)  # emptiness gate: no write at all
-    handle(raw, 9)
-    assert spark.read.parquet(dirs["fact"]).count() == 32
 
 
 def test_windowed_and_session_streams(spark, sf_dir, tmp_path):
@@ -269,45 +195,54 @@ def test_streaming_dedup_on_arrival_across_batches(spark, sf_dir, tmp_path):
 
 
 def test_transactional_pipeline_stream_restart_idempotent(spark, dirs):
-    """Full streaming run into ParquetTable sinks: first drain commits
-    each micro-batch as a table version; a RESTART over the same
-    checkpoint re-reads nothing; a restart with a WIPED checkpoint
-    replays the files but the merge leaves row counts unchanged
-    (keyed upsert) — the two independent exactly-once layers."""
+    """Full streaming run into ParquetTable sinks: the first drain
+    commits the fixture (16 fact rows, O9 quarantined); a RESTART over
+    the same checkpoint re-reads nothing; a new file is picked up
+    incrementally, and a re-sent order upserts instead of duplicating;
+    a restart with a WIPED checkpoint replays every file but the keyed
+    merge leaves row counts unchanged — the two independent
+    exactly-once layers."""
     import shutil
 
     from amante_s_supabase_full_cloud_etl_pipeline_spark.sources.table_format import (
         ParquetTable,
     )
-    from amante_s_supabase_full_cloud_etl_pipeline_spark.streaming.pipeline import (
-        run_pos_pipeline_transactional,
-    )
 
-    fact_t = ParquetTable(spark, dirs["fact"] + "_table")
-    quar_t = ParquetTable(spark, dirs["quarantine"] + "_table")
+    fact_t = ParquetTable(spark, dirs["fact"])
+    quar_t = ParquetTable(spark, dirs["quarantine"])
 
-    write_landing_csv(raw_pos_df(spark), dirs["landing"], "batch1")
-    q = run_pos_pipeline_transactional(
-        spark, dirs["landing"], fact_t, quar_t, dirs["checkpoint"]
-    )
-    q.awaitTermination(120)
-    v1, n1 = fact_t.current_version(), fact_t.read().count()
-    assert v1 >= 1 and n1 > 0 and quar_t.read().count() > 0
+    def drain():
+        q = run_pos_pipeline_transactional(
+            spark, dirs["landing"], fact_t, quar_t, dirs["checkpoint"]
+        )
+        q.awaitTermination(120)
+
+    raw = raw_pos_df(spark)
+    write_landing_csv(raw, dirs["landing"], "batch1")
+    drain()
+    v1 = fact_t.current_version()
+    assert v1 >= 1 and fact_t.read().count() == 16  # 17 line items, 1 quarantined
+    assert [r["order_id"] for r in quar_t.read().collect()] == ["O9"]
 
     # restart over the same checkpoint: files already consumed
-    q = run_pos_pipeline_transactional(
-        spark, dirs["landing"], fact_t, quar_t, dirs["checkpoint"]
-    )
-    q.awaitTermination(120)
-    assert (fact_t.current_version(), fact_t.read().count()) == (v1, n1)
+    drain()
+    assert (fact_t.current_version(), fact_t.read().count()) == (v1, 16)
+
+    # a new order arriving is picked up incrementally
+    o1 = raw.filter(F.col("`Order ID`") == "O1")
+    write_landing_csv(o1.withColumn("Order ID", F.lit("O1-new")), dirs["landing"], "batch2")
+    drain()
+    assert fact_t.read().count() == 18  # +2 line items
+
+    # a re-sent order upserts on FACT_KEYS
+    write_landing_csv(o1, dirs["landing"], "batch3")
+    drain()
+    assert fact_t.read().count() == 18
 
     # checkpoint lost → at-least-once replay; keyed MERGE absorbs it
     shutil.rmtree(dirs["checkpoint"])
-    q = run_pos_pipeline_transactional(
-        spark, dirs["landing"], fact_t, quar_t, dirs["checkpoint"]
-    )
-    q.awaitTermination(120)
-    assert fact_t.read().count() == n1
+    drain()
+    assert (fact_t.read().count(), quar_t.read().count()) == (18, 1)
 
 
 def test_streaming_curation_end_to_end(spark, sf_dir, tmp_path):

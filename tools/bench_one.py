@@ -32,22 +32,6 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = get_spark("amante-bench-one")
     registry.load_all_queries()
-    extra = bench._extra_queries()
-
-    def query_fn(name):
-        inner = extra.get(name)
-        if inner is None:
-            return registry.QUERIES[name]
-
-        def wrapped(spark_, sf_dir_):
-            from amante_s_supabase_full_cloud_etl_pipeline_spark.operators.cache import (
-                release_tracked,
-            )
-
-            release_tracked()
-            return inner(spark_, sf_dir_)
-
-        return wrapped
 
     timings, spreads = {}, {}
     for name in names:
@@ -60,7 +44,7 @@ def main() -> None:
         elif name == "pos_kernel_1m_orders":
             best, spread = bench.pos_kernel_throughput(spark)
         else:
-            fn = query_fn(name)
+            fn = bench.query_fn(name)
             built = fn(spark, sf_dir)
             # untimed-setup rows return a per-pass frame builder
             # (see bench.force); everything else times build+action

@@ -18,7 +18,7 @@ sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), ".."
 from amante_s_supabase_full_cloud_etl_pipeline_spark import registry
 from amante_s_supabase_full_cloud_etl_pipeline_spark.session import get_spark
 
-from bench import HEADLINE, _extra_queries
+from bench import HEADLINE, query_fn
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 OUT = os.path.join(os.path.dirname(os.path.abspath(__file__)), "..", "PLANS.md")
@@ -58,33 +58,21 @@ def _final_plan_summary(df) -> str:
 def main() -> None:
     spark = get_spark("plan-dump")
     registry.load_all_queries()
-    extra = _extra_queries()
 
-    def query_fn(name):
-        fn = registry.QUERIES.get(name)
-        if fn is not None:
-            return fn
-        inner = extra[name]
-
-        def wrapped(spark_, sf_dir_):
-            # same cache lifecycle as the registry/bench wrappers
-            from amante_s_supabase_full_cloud_etl_pipeline_spark.operators.cache import (
-                release_tracked,
-            )
-
-            release_tracked()
-            return inner(spark_, sf_dir_)
-
-        return wrapped
+    def frame(name):
+        built = query_fn(name)(spark, SF_DIR)
+        # untimed-setup row (see bench.force): the row returns a
+        # per-pass frame builder
+        return built() if callable(built) else built
 
     sections = [HEADER]
     for name in HEADLINE:
-        df = query_fn(name)(spark, SF_DIR)
+        df = frame(name)
         buf = io.StringIO()
         with redirect_stdout(buf):
             df.explain("formatted")
         static_plan = buf.getvalue().rstrip()
-        summary = _final_plan_summary(query_fn(name)(spark, SF_DIR))
+        summary = _final_plan_summary(frame(name))
         sections.append(
             f"\n## {name}\n\nfinal adaptive plan: {summary}\n\n```\n{static_plan}\n```\n"
         )

@@ -33,7 +33,6 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = get_spark("amante-explain-one")
     registry.load_all_queries()
-    extra = bench._extra_queries()
     os.makedirs(args.out, exist_ok=True)
 
     for name in args.rows:
@@ -63,8 +62,7 @@ def main() -> None:
 
             df = transform_pos(bench.synthetic_pos_raw(spark), spark)
         else:
-            fn = extra.get(name) or registry.QUERIES[name]
-            df = fn(spark, sf_dir)
+            df = bench.query_fn(name)(spark, sf_dir)
             if callable(df):
                 # untimed-setup row (see bench.force): the builder
                 # returns a per-pass frame factory

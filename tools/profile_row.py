@@ -32,30 +32,14 @@ def main() -> None:
     spark = get_spark("amante-profile-row")
     ui = spark.sparkContext.uiWebUrl
     registry.load_all_queries()
-    extra = bench._extra_queries()
-
-    def query_fn():
-        inner = extra.get(name)
-        if inner is None:
-            return registry.QUERIES[name]
-
-        def wrapped(spark_, sf_dir_):
-            from amante_s_supabase_full_cloud_etl_pipeline_spark.operators.cache import (
-                release_tracked,
-            )
-
-            release_tracked()
-            return inner(spark_, sf_dir_)
-
-        return wrapped
+    fn = bench.query_fn(name)
 
     for _ in range(2):
-        w = query_fn()(spark, sf_dir)
+        w = fn(spark, sf_dir)
         (w() if callable(w) else w).write.mode("overwrite").format("noop").save()
     app = json.load(urllib.request.urlopen(f"{ui}/api/v1/applications"))[0]["id"]
     # build+action as one window, matching bench.force (r14); an
     # untimed-setup row returns a per-pass builder instead of a frame
-    fn = query_fn()
     probe = fn(spark, sf_dir)
     mk = probe if callable(probe) else None
     jobs0 = json.load(urllib.request.urlopen(f"{ui}/api/v1/applications/{app}/jobs"))
