@@ -20,14 +20,6 @@ from pyspark.sql import functions as F
 from .dedup import shingle_table
 
 
-def eval_shingle_set(
-    eval_docs: DataFrame, k: int = 3, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """Distinct shingles of the evaluation set — the (small)
-    broadcast build side of the contamination probe."""
-    return shingle_table(eval_docs, k, text_col, id_col).select("shingle").distinct()
-
-
 def contamination_overlap(
     corpus: DataFrame,
     eval_docs: DataFrame,
@@ -47,7 +39,8 @@ def contamination_overlap(
     data", which must fire even when the eval side is much larger.
     """
     corpus_sh = shingle_table(corpus, k, text_col, id_col)
-    eval_sh = eval_shingle_set(eval_docs, k, text_col, id_col)
+    # distinct eval shingles: the (small) broadcast build side
+    eval_sh = shingle_table(eval_docs, k, text_col, id_col).select("shingle").distinct()
     hits = corpus_sh.join(F.broadcast(eval_sh), "shingle", "left_semi")
     overlap = F.col("n_hit").cast("double") / F.col("n_shingles").cast("double")
     return (

@@ -1,9 +1,6 @@
-"""Event-stream analytics in batch form (SURVEY.md §2.8 extension).
-
-These are the batch-equivalent shapes of the streaming pipelines in
-``streaming/`` — tumbling windows, sessionization, late-data
-filtering — expressed so the DuckDB oracle can verify the semantics.
-The streaming module reuses the same column logic under readStream.
+"""Event-stream analytics in batch form (SURVEY.md §2.8 extension):
+tumbling and sliding windows, sessionization and late-data
+filtering, expressed so the DuckDB oracle can verify the semantics.
 """
 
 from __future__ import annotations
@@ -55,12 +52,10 @@ from ._common import dec
 )
 def events_windowed_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tumbling 1h AND sliding (1h length, 10-min slide) event-time
-    windows PLUS the 6h late-data gate in one labeled result — the
-    batch forms of the streaming windowed aggs (streaming/events.py
-    runs the same logic with a watermark under readStream; each event
-    lands in exactly 6 sliding windows, and the late_6h_gate leg is
-    the cutoff a 6h watermark enforces, its window_start carrying the
-    cutoff timestamp). The oracle reconstructs Spark's window set
+    windows PLUS the 6h late-data gate in one labeled result (each
+    event lands in exactly 6 sliding windows, and the late_6h_gate
+    leg is the cutoff a 6h watermark enforces, its window_start
+    carrying the cutoff timestamp). The oracle reconstructs Spark's window set
     relationally (explode of 6 aligned offsets per event)."""
     ev = catalog.table(spark, sf_dir, "events")
     tumbling = (
@@ -143,8 +138,7 @@ def events_windowed_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 def events_sessionization(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gap-based sessionization (30-min inactivity): lag + running
     sum of session-start markers — the classic shuffle-once
-    per-user-window plan (streaming twin: session_window /
-    applyInPandasWithState in streaming/events.py)."""
+    per-user-window plan."""
     ev = catalog.table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     marked = ev.withColumn(

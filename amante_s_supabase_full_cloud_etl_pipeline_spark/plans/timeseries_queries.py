@@ -142,9 +142,7 @@ def timeseries_metrics_long(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The time-series operator family over events as one long-format
     panel. ``zscore``: each value scored against the exact-decimal
     mean/variance of the 50 PRECEDING events of its type
-    (self-excluded frame — the state a watermarked streaming twin
-    keeps; streaming/anomaly.py runs the identical math as ring-
-    buffer state), |z| > 2 rows only. ``ohlc_hourly``: hourly
+    (self-excluded frame), |z| > 2 rows only. ``ohlc_hourly``: hourly
     open/high/low/close/volume bars per type in ONE hash aggregation
     (min_by/max_by on the (ts, event_id) struct — no window; the
     oracle needs windows only because SQL lacks composite-order

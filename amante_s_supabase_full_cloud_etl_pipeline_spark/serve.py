@@ -9,15 +9,15 @@ protocol) can query.
 ``create_serving_views`` registers every registry query as a named
 view (plus the base tables), so any SQL client — a notebook,
 ``spark.sql``, or a Thrift/JDBC session — can
-``SELECT * FROM serve_a4_a7_headline_kpis`` without touching the
-Python API. Views are lazy logical plans: each SELECT re-optimizes
+``SELECT * FROM global_temp.serve_a4_a7_headline_kpis`` without
+touching the Python API. Views are lazy logical plans: each SELECT re-optimizes
 with the caller's predicates on top (Catalyst pushes them into the
 underlying plan), which is exactly what a BI slicer needs.
 
-``scope="global"`` registers GLOBAL temp views (``global_temp.*``):
-Thrift connections get their own Spark session inside the same
-context, and global temp views are the session-crossing mechanism —
-a plain temp view would be invisible to JDBC clients.
+The views are GLOBAL temp views (``global_temp.*``): Thrift
+connections get their own Spark session inside the same context, and
+global temp views are the session-crossing mechanism — a plain temp
+view would be invisible to JDBC clients.
 
 Deployment recipes (the production forms of what
 :func:`start_thrift_endpoint` does in-process):
@@ -45,8 +45,8 @@ Deployment recipes (the production forms of what
   full distribution), and ``tests/test_connect_serve.py`` runs
   Config and ExecutePlan RPCs end-to-end — Arrow results from the
   ``global_temp.serve_*`` views, value-equal to the in-session
-  answer. Connect sessions are isolated like Thrift ones, so
-  ``scope="global"`` is the crossing mechanism for both.
+  answer. Connect sessions are isolated like Thrift ones, so global
+  temp views are the crossing mechanism for both.
 """
 
 from __future__ import annotations
@@ -58,34 +58,17 @@ from pyspark.sql import SparkSession
 from . import catalog, registry
 
 
-def create_serving_views(
-    spark: SparkSession,
-    sf_dir: str,
-    prefix: str = "serve_",
-    scope: str = "session",
-) -> list[str]:
-    """Register base tables + every registry query as views. Returns
-    the created view names, qualified the way a client must address
-    them. ``scope="session"`` uses plain temp views (visible to this
-    session only; names returned bare); ``scope="global"`` uses
-    global temp views for BOTH the base tables and the serving views
-    — required for Thrift/JDBC clients, whose connections are
-    separate sessions — and returns ``global_temp.``-qualified
-    names."""
-    if scope not in ("session", "global"):
-        raise ValueError(f"scope must be 'session' or 'global', got {scope!r}")
+def create_serving_views(spark: SparkSession, sf_dir: str) -> list[str]:
+    """Register base tables + every registry query (as ``serve_<name>``)
+    as global temp views — Thrift/JDBC and Connect clients run in
+    separate sessions — and return the ``global_temp.``-qualified
+    view names."""
     registry.load_all_queries()
-    catalog.register_views(spark, sf_dir, scope=scope)
-    qualifier = "global_temp." if scope == "global" else ""
+    catalog.register_views(spark, sf_dir, scope="global")
     names = []
     for name, fn in registry.QUERIES.items():
-        view = f"{prefix}{name}"
-        df = fn(spark, sf_dir)
-        if scope == "global":
-            df.createOrReplaceGlobalTempView(view)
-        else:
-            df.createOrReplaceTempView(view)
-        names.append(f"{qualifier}{view}")
+        fn(spark, sf_dir).createOrReplaceGlobalTempView(f"serve_{name}")
+        names.append(f"global_temp.serve_{name}")
     return names
 
 
@@ -96,9 +79,8 @@ def start_thrift_endpoint(
     session's context and return ``(jdbc_url, server)`` — the
     single-node form of ``start-thriftserver.sh`` (see module
     docstring for the cluster recipe). ``port=0`` picks a free port.
-    Views meant for JDBC clients must be registered with
-    ``scope="global"``; clients address them as
-    ``global_temp.serve_*``. Call ``server.stop()`` to shut down.
+    Clients address the serving views as ``global_temp.serve_*``.
+    Call ``server.stop()`` to shut down.
 
     Raises RuntimeError when the distribution lacks the
     hive-thriftserver classes (pip minimal builds)."""

@@ -1,6 +1,5 @@
 """Incrementally-maintained IVF ANN index — continuous embedding
-ingest with query-anytime semantics (charter §2.10 × §2.8; the dense
-sibling of ``streaming/dedup_index.py``).
+ingest with query-anytime semantics (charter §2.10 × §2.8).
 
 The batch ``operators/similarity.py ivf_topk`` fits its quantizer and
 builds its inverted lists per call — right for one-shot queries,

@@ -4,9 +4,8 @@ dedup modality here carries a persistent cross-batch tier — MinHash
 bands, chunk hashes, crawl URLs; audio lands with one, not a round
 later).
 
-The pattern is :mod:`.dedup_index`'s, with probe keys in place of
-LSH band hashes: a persistent ParquetTable holds every ingested
-recording's DISTINCT multi-probe keys; each micro-batch
+A persistent ParquetTable holds every ingested recording's DISTINCT
+multi-probe keys, an inverted index on the probe key; each micro-batch
 
 1. fingerprints its blobs worker-side (decode → framed rFFT →
    band-sign prints → 33× multi-probe keys — all in ONE Arrow
@@ -82,22 +81,7 @@ def fold_audio_index(
     for the LIFETIME of an index (probes folded at different rates
     never match; same contract as the chunker params on the chunk
     index)."""
-    return _fold_probes(
-        index, audio_probes(batch, canonical_rate), batch_id,
-        max_posting, min_shared,
-    )
-
-
-def _fold_probes(
-    index: ParquetTable,
-    rows: DataFrame,
-    batch_id: int | None,
-    max_posting: int,
-    min_shared: int,
-) -> DataFrame:
-    """The probe-index fold shared with :mod:`.video_index`: pair the
-    batch's (doc_id, probe) ``rows`` with themselves and with the
-    store, then append them under the ``batch_id`` ledger."""
+    rows = audio_probes(batch, canonical_rate)
     rows.persist()
     try:
         stored = read_pruned_by_keys(index, rows, "probe")

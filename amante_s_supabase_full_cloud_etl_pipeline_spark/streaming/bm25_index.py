@@ -9,10 +9,9 @@ is APPEND-DECOMPOSABLE — a document's postings rows (term, doc_id,
 tf) and its length row (doc_id, dl) depend on that document alone.
 So the streaming form folds each micro-batch's rows into two
 persistent ParquetTables (snapshot-isolated, exactly-once per
-batch_id), completing the streaming-index trilogy next to the
-near-dup band index (``dedup_index.py``) and the IVF ANN index
-(``ann_index.py``): the lexical half of hybrid RAG retrieval stays
-queryable while the corpus grows.
+batch_id), next to the IVF ANN index (``ann_index.py``): the
+lexical half of hybrid RAG retrieval stays queryable while the
+corpus grows.
 
 What is deliberately NOT stored: per-term document frequency. df is
 a GLOBAL aggregate — denormalizing it onto postings (as the batch

@@ -1,6 +1,6 @@
-"""Streaming chunk-hash index — the FastCDC twin of
-``streaming/dedup_index.py`` (VERDICT r9 #1: the one incremental
-surface still missing; SURVEY.md §2.10's deferred design brief).
+"""Streaming chunk-hash index over FastCDC chunks (VERDICT r9 #1: the
+one incremental surface still missing; SURVEY.md §2.10's deferred
+design brief).
 
 ``operators/cdc.py`` chunks documents at content-defined boundaries
 and exposes two batch queries: :func:`~..operators.cdc.chunk_dedup_stats`

@@ -8,7 +8,7 @@ contract: its file-consumption loop, ref ``main.py:419-441,465-469``,
 processes whatever landed since last time). A batch re-run over a new
 shard re-admits every URL the previous run already kept; this module
 closes that with the continuous-crawl pattern every other retrieval
-surface here already has (``dedup_index`` / ``ann_index`` /
+surface here already has (``ann_index`` /
 ``bm25_index``): a persistent canonical-URL index on the table
 format, folded exactly-once per micro-batch.
 
@@ -79,7 +79,7 @@ from ..sources.table_format import ParquetTable
 #: above this many distinct curls in a batch, the file prune degrades
 #: from an IN-list to the batch's (min, max) curl RANGE — still
 #: two-level manifest pruning, never a full-index scan (same bound as
-#: the dedup_index / bm25_index probes)
+#: the bm25_index probes)
 _MAX_IN_LIST = 50_000
 
 #: the index's slim row — everything BUT the page payload

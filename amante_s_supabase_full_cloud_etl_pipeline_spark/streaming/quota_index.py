@@ -59,7 +59,7 @@ from ..sources.table_format import ParquetTable
 
 #: above this many distinct sites in a batch, the file prune degrades
 #: from an IN-list to the batch's site RANGE (same bound as the
-#: crawl_index / dedup_index probes)
+#: crawl_index probes)
 _MAX_IN_LIST = 50_000
 
 _INDEX_COLS = ["site", "rank", "key", "url"]

@@ -4,8 +4,7 @@ time-series and sketch surface composed as an on-call dashboard:
     python examples/monitoring.py [sf_dir]
 
 1. Rolling z-score anomalies (each value scored against the 50
-   preceding events of its type; same math the streaming twin in
-   streaming/anomaly.py keeps as ring-buffer state).
+   preceding events of its type).
 2. Hourly OHLC bars for the noisiest metric.
 3. Gap-filled daily purchase series (linear interpolation) — the
    regularized series a forecaster consumes.

@@ -9,8 +9,7 @@ it:
 3. Heavy hitters over event types with error certificates
    (stand-in for the high-cardinality page/URL column a real
    deployment sketches).
-4. Session stats from the batch twin of the streaming
-   sessionization.
+4. Session stats from gap-based sessionization.
 
 Everything is lazy DataFrame composition — at 100 TB the funnel and
 retention shuffle per-user rows (never events), the heavy-hitters

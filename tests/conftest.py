@@ -29,10 +29,10 @@ def sf_dir() -> str:
 @pytest.fixture(scope="session")
 def global_serving_views(spark, sf_dir) -> list[str]:
     """Every registry view registered once per session as global temp
-    views (the Thrift and Connect serving legs both read them);
-    returns the qualified view names."""
+    views (the view-surface, Thrift and Connect serving tests all read
+    them); returns the qualified view names."""
     from amante_s_supabase_full_cloud_etl_pipeline_spark.serve import (
         create_serving_views,
     )
 
-    return create_serving_views(spark, sf_dir, scope="global")
+    return create_serving_views(spark, sf_dir)

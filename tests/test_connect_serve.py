@@ -122,8 +122,8 @@ def test_execute_plan_serves_registry_view(
     views registered by serve.py, queried via ExecutePlan from the
     stdlib transport, Arrow results equal to the direct in-session
     answer. Connect sessions are ISOLATED from the creating session —
-    global temp views are exactly the crossing mechanism (same reason
-    the Thrift leg uses scope='global')."""
+    global temp views are exactly the crossing mechanism (the same
+    reason the Thrift leg reads them)."""
     q = (
         "SELECT region_name, net_sales, line_items "
         "FROM global_temp.serve_star_net_sales_by_region "

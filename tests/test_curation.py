@@ -222,129 +222,6 @@ def test_contamination_partition_independent(spark, sf_dir):
     assert again == base
 
 
-def test_quality_buckets_differential_vs_duckdb_ntile_boundaries(spark, sf_dir):
-    """Bucket assignment matches DuckDB computing the same cut points
-    with quantile_cont and the same tie rule — and the plan never
-    globally sorts the corpus (boundaries broadcast instead)."""
-    import duckdb
-
-    from amante_s_supabase_full_cloud_etl_pipeline_spark import catalog
-    from amante_s_supabase_full_cloud_etl_pipeline_spark.operators.curriculum import (
-        quality_buckets,
-    )
-
-    docs = catalog.table(spark, sf_dir, "documents")
-    got = {
-        r.doc_id: r.bucket
-        for r in quality_buckets(docs, n_buckets=10).select("doc_id", "bucket").collect()
-    }
-
-    # DuckDB reference: identical quality scores exported from Spark
-    # (the score expression itself is oracle-checked by
-    # text_quality_band), identical cut points + tie rule.
-    scored = quality_buckets(docs, n_buckets=10).select("doc_id", "quality").toPandas()
-    con = duckdb.connect()
-    con.register("scored", scored)
-    expect = dict(
-        con.execute(
-            """
-            WITH b AS (
-                SELECT quantile_cont(quality,
-                    [x * 0.1 FOR x IN range(1, 10)]) AS bounds
-                FROM scored
-            )
-            SELECT doc_id,
-                   1 + len(list_filter(b.bounds, x -> quality > x)) AS bucket
-            FROM scored, b
-            """
-        ).fetchall()
-    )
-    assert got == expect
-
-    # every bucket is populated and ordered by quality band
-    from collections import defaultdict
-
-    by_bucket = defaultdict(list)
-    for r in quality_buckets(docs, n_buckets=10).select("bucket", "quality").collect():
-        by_bucket[r.bucket].append(r.quality)
-    assert set(by_bucket) == set(range(1, 11))
-    for b in range(1, 10):
-        assert max(by_bucket[b]) <= min(by_bucket[b + 1]) + 1e-12
-
-    # scalable plan shape: no global Sort before the bucket projection
-    plan = (
-        quality_buckets(docs, n_buckets=10)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "BroadcastNestedLoopJoin" in plan or "BroadcastExchange" in plan
-
-
-def test_quality_buckets_approximate_mode_tracks_exact(spark, sf_dir):
-    """The 100 TB path: approx_percentile boundaries. At the test
-    accuracy the sketch is rank-exact, so bucketing must agree with
-    the exact mode almost everywhere; the rank structure (Spearman on
-    bucket ids) must stay ~1 even where boundary ties differ — and
-    the plan must keep the same broadcast no-global-sort shape."""
-    from amante_s_supabase_full_cloud_etl_pipeline_spark import catalog
-    from amante_s_supabase_full_cloud_etl_pipeline_spark.operators.curriculum import (
-        quality_buckets,
-    )
-
-    docs = catalog.table(spark, sf_dir, "documents")
-    exact = {
-        r.doc_id: r.bucket
-        for r in quality_buckets(docs, n_buckets=10).select("doc_id", "bucket").collect()
-    }
-    approx = {
-        r.doc_id: r.bucket
-        for r in quality_buckets(docs, n_buckets=10, approximate=True)
-        .select("doc_id", "bucket")
-        .collect()
-    }
-    assert set(exact) == set(approx)
-    n = len(exact)
-    agree = sum(exact[d] == approx[d] for d in exact)
-    assert agree / n >= 0.95, f"only {agree}/{n} bucket assignments agree"
-
-    # Spearman rank correlation over the bucket ids (ties get their
-    # group's mean rank) — the curriculum ORDER is what training
-    # consumes, and it must be preserved.
-    def ranks(vals):
-        order = sorted(range(len(vals)), key=lambda i: vals[i])
-        r = [0.0] * len(vals)
-        i = 0
-        while i < len(order):
-            j = i
-            while j + 1 < len(order) and vals[order[j + 1]] == vals[order[i]]:
-                j += 1
-            mean = (i + j) / 2 + 1
-            for t in range(i, j + 1):
-                r[order[t]] = mean
-            i = j + 1
-        return r
-
-    ids = sorted(exact)
-    xe, xa = ranks([exact[d] for d in ids]), ranks([approx[d] for d in ids])
-    me, ma = sum(xe) / n, sum(xa) / n
-    cov = sum((a - me) * (b - ma) for a, b in zip(xe, xa))
-    var = (
-        sum((a - me) ** 2 for a in xe) * sum((b - ma) ** 2 for b in xa)
-    ) ** 0.5
-    spearman = cov / var
-    assert spearman > 0.99, f"rank correlation degraded: {spearman:.4f}"
-
-    # every bucket still populated; the sketch aggregate is really in
-    # the plan (physical toString truncates long expressions, so check
-    # the analyzed plan) and the broadcast no-global-sort shape holds
-    assert set(approx.values()) == set(range(1, 11))
-    qe = quality_buckets(docs, n_buckets=10, approximate=True)._jdf.queryExecution()
-    assert "percentile_approx" in qe.analyzed().toString()
-    physical = qe.executedPlan().toString()
-    assert "BroadcastNestedLoopJoin" in physical or "BroadcastExchange" in physical
-
-
 # -- overlapping document chunking (RAG indexing prep) ---------------------
 
 

@@ -83,8 +83,8 @@ def test_thrift_endpoint_serves_registry_views(spark, global_serving_views):
             (r["grp_key"], float(r["amount"])) for r in direct
         ]
 
-        # base tables must be visible to JDBC clients too (scope=
-        # "global" registers them as global temp views)
+        # base tables must be visible to JDBC clients too (they are
+        # registered as global temp views)
         base = _beeline(
             url,
             "SELECT COUNT(*) AS n FROM global_temp.documents",

@@ -17,19 +17,14 @@ def test_approx_distinct_close_to_exact(spark, sf_dir):
         )
 
 
-def test_serving_views_surface(spark, sf_dir):
+def test_serving_views_surface(spark, global_serving_views):
     """S10: every registry query is SQL-addressable as a view; a BI
     slicer predicate on a view composes with the underlying plan."""
-    from amante_s_supabase_full_cloud_etl_pipeline_spark.serve import (
-        create_serving_views,
-    )
-
-    views = create_serving_views(spark, sf_dir)
+    views = global_serving_views
     assert len(views) == len(registry.QUERIES) and len(views) >= 50
-    direct = spark.sql("SELECT * FROM serve_star_net_sales_by_region").collect()
-    assert len(direct) == 5
+    view = "global_temp.serve_star_net_sales_by_region"
+    assert len(spark.sql(f"SELECT * FROM {view}").collect()) == 5
     sliced = spark.sql(
-        "SELECT region_name, net_sales FROM serve_star_net_sales_by_region "
-        "WHERE region_name = 'ASIA'"
+        f"SELECT region_name, net_sales FROM {view} WHERE region_name = 'ASIA'"
     ).collect()
     assert len(sliced) == 1 and sliced[0]["region_name"] == "ASIA"

@@ -135,6 +135,25 @@ def test_ubiquity_cap_drops_boilerplate(spark, corpus):
     assert shared_video_pairs(probes, max_posting=1).count() == 0
 
 
+def test_shared_fraction_cut_only_narrows(spark, corpus):
+    """``min_shared_frac`` cuts on top of the absolute floor: a high
+    fraction keeps only near-complete overlaps (brightness and
+    truncated exact-invariance pairs) and drops the q40 re-encode
+    pairs, never adding one."""
+    df, _ = corpus
+    probes = video_probes(df)
+
+    def pairs(frac):
+        return {
+            (r["doc_a"], r["doc_b"])
+            for r in shared_video_pairs(probes, min_shared_frac=frac).collect()
+        }
+
+    loose, tight = pairs(0.0), pairs(0.99)
+    assert tight <= loose
+    assert len(tight) < len(loose)
+
+
 def test_damage_and_non_video_emit_nothing(spark):
     rows = [
         (1, bytearray(b"\x00" * 64)),
