@@ -41,14 +41,6 @@ def read_landing_csv(
     )
 
 
-def read_landing_json(spark: SparkSession, path: str, schema: str) -> DataFrame:
-    return spark.read.schema(schema).option("mode", "PERMISSIVE").json(path)
-
-
-def read_landing_parquet(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)
-
-
 def tolerant_select(df: DataFrame, wanted: tuple[str, ...] = RAW_COLUMNS) -> DataFrame:
     """P5: project only the expected columns that actually exist."""
     have = set(df.columns)

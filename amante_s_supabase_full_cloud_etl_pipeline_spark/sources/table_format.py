@@ -106,7 +106,6 @@ ManifestMergeManager performs. ``history()`` reads summaries only.
 from __future__ import annotations
 
 import datetime as _dt
-import hashlib
 import json
 import os
 import shutil
@@ -174,85 +173,11 @@ def _comparable(bound, literal):
 
 _OPS = ("=", "<", "<=", ">", ">=", "in")
 
-# -- per-file bloom filters -------------------------------------------------
-# Point-lookup data skipping on columns min/max bounds cannot prune (an id
-# scattered across the value range leaves every file's [lo, hi] covering
-# it). One bloom per (file, column) lives in the file's manifest entry:
-# membership says maybe-present, absence is definite, so pruning on a
-# negative is always safe. Supported for int and string columns; the
-# filter literal must be the same type, otherwise the bloom is ignored.
-
-_BLOOM_TAGS = {int: "i", str: "s"}
-
-
-def _bloom_hashes(canon: str, m: int, k: int) -> list[int]:
-    """k bit positions by double hashing (Kirsch-Mitzenmacher):
-    md5-derived h1/h2, positions (h1 + i*h2) mod m — deterministic
-    across runs, engines, and partitionings."""
-    d = hashlib.md5(canon.encode()).digest()
-    h1 = int.from_bytes(d[:8], "big")
-    h2 = int.from_bytes(d[8:], "big") | 1
-    return [(h1 + i * h2) % m for i in range(k)]
-
-
-def _build_bloom(values, fpp: float) -> dict | None:
-    """Bloom dict {"m", "k", "t", "b"(ase64 bits)} over distinct
-    non-null values, or None when the column's type is unsupported
-    or mixed."""
-    import base64
-    import math
-
-    import numpy as np
-
-    distinct = {v for v in values if v is not None}
-    if not distinct:
-        return None
-    tags = {_BLOOM_TAGS.get(type(v)) for v in distinct}
-    if len(tags) != 1 or None in tags:
-        return None
-    (tag,) = tags
-    n = len(distinct)
-    m = max(64, int(math.ceil(-n * math.log(fpp) / (math.log(2) ** 2))))
-    m = (m + 7) // 8 * 8  # byte-align
-    k = max(1, round(m / n * math.log(2)))
-    bits = np.zeros(m, dtype=bool)
-    for v in distinct:
-        bits[_bloom_hashes(str(v), m, k)] = True
-    return {
-        "m": m,
-        "k": k,
-        "t": tag,
-        "b": base64.b64encode(np.packbits(bits).tobytes()).decode(),
-    }
-
-
-def _bloom_maybe_contains(bloom: dict, value) -> bool:
-    """False ONLY when the value is definitely absent from the file."""
-    import base64
-
-    import numpy as np
-
-    if _BLOOM_TAGS.get(type(value)) != bloom["t"]:
-        return True  # type mismatch: bloom can't speak for this literal
-    bits = np.unpackbits(
-        np.frombuffer(base64.b64decode(bloom["b"]), dtype=np.uint8)
-    )
-    return all(bits[p] for p in _bloom_hashes(str(value), bloom["m"], bloom["k"]))
-
-
 def _file_prunable(meta: dict, filters: Sequence[tuple]) -> bool:
     """True when no row of the file can satisfy ALL filters (AND
     semantics). Missing stats for a column → not prunable on it."""
     stats = meta.get("stats") or {}
-    blooms = meta.get("blooms") or {}
     for col, op, value in filters:
-        bloom = blooms.get(col)
-        if bloom is not None and op in ("=", "in"):
-            values = list(value) if op == "in" else [value]
-            if values and not any(
-                _bloom_maybe_contains(bloom, v) for v in values
-            ):
-                return True
         st = stats.get(col)
         if st is None:
             continue
@@ -310,11 +235,19 @@ def _filter_condition(filters: Sequence[tuple]):
     return cond
 
 
+#: distinct keys :func:`read_pruned_by_keys` collects into an IN
+#: list; past it the probe degrades to the batch's key range
+_MAX_IN_LIST = 50_000
+
+#: attempts :meth:`ParquetTable._retry` makes before a CommitConflict
+#: propagates
+_COMMIT_ATTEMPTS = 5
+
+
 def read_pruned_by_keys(
     table: "ParquetTable",
     keys: DataFrame,
     key_col: str,
-    max_in_list: int = 50_000,
 ) -> DataFrame | None:
     """Read ``table`` pruned to the key values present in
     ``keys[key_col]``: a bounded driver IN list when the distinct
@@ -332,20 +265,18 @@ def read_pruned_by_keys(
     crawl seen-index keeps its own richer form — interleaved with
     its empty-batch early return and marker columns — documented
     there)."""
-    from pyspark.sql import functions as F
-
     if table.current_version() == 0:
         return None
     touched = [
         r[key_col]
         for r in keys.select(key_col)
         .distinct()
-        .limit(max_in_list + 1)
+        .limit(_MAX_IN_LIST + 1)
         .collect()
     ]
     if not touched:
         return None
-    if len(touched) <= max_in_list:
+    if len(touched) <= _MAX_IN_LIST:
         filters = [(key_col, "in", touched)]
     else:
         bounds = keys.agg(
@@ -462,7 +393,12 @@ class ParquetTable:
     entry. Callers need no emptiness probe of their own. The one
     exception is a zero-row merge into a version-0 table, which
     commits so the table becomes readable (empty, with the batch's
-    schema).
+    schema); that commit records no ``batch_id`` either, so the id
+    stays free for a later batch that brings rows.
+
+    File skipping has one rule: the manifest's per-file and
+    per-manifest min/max bounds, which ``compact(sort_by=...)`` makes
+    tight.
 
     ``manifest_merge_at`` bounds the manifest-list length: a commit
     that would exceed it folds the smallest manifest files into one
@@ -473,9 +409,6 @@ class ParquetTable:
         spark: SparkSession,
         path: str,
         manifest_merge_at: int = 64,
-        bloom_columns: Sequence[str] | None = None,
-        bloom_fpp: float = 0.01,
-        bloom_max_rows: int = 200_000,
     ):
         self.spark = spark
         self.path = _local(path)
@@ -486,16 +419,6 @@ class ParquetTable:
         self._mcache: dict[str, list[dict]] = {}
         os.makedirs(os.path.join(self.path, "data"), exist_ok=True)
         os.makedirs(self._manifests, exist_ok=True)
-        # Bloom config is a TABLE property: persisted in the manifest
-        # list at commit, restored on reopen unless overridden — so a
-        # writer opened without the kwarg keeps indexing the same
-        # columns (files written without a bloom simply never
-        # bloom-prune; degradation, not wrongness).
-        if bloom_columns is None:
-            bloom_columns = self.manifest().get("bloom_columns") or []
-        self.bloom_columns = list(bloom_columns)
-        self.bloom_fpp = bloom_fpp
-        self.bloom_max_rows = bloom_max_rows
 
     # -- snapshot resolution ------------------------------------------------
 
@@ -727,33 +650,6 @@ class ParquetTable:
                 # Stats are an optimization; a file we can't digest is
                 # simply never pruned.
                 pass
-            if self.bloom_columns:
-                # Point-lookup index: one bloom per configured column
-                # per file (a cluster deployment computes these on the
-                # executors at write time, like Iceberg writer-side
-                # NDV/bloom collection; here the just-written local
-                # file is read back column-pruned). bloom_max_rows
-                # bounds both build cost and manifest growth.
-                try:
-                    pf = pq.ParquetFile(full)
-                    want = [
-                        c
-                        for c in self.bloom_columns
-                        if c in pf.schema_arrow.names
-                    ]
-                    if want and pf.metadata.num_rows <= self.bloom_max_rows:
-                        tbl = pf.read(columns=want)
-                        blooms = {}
-                        for c in want:
-                            b = _build_bloom(
-                                tbl.column(c).to_pylist(), self.bloom_fpp
-                            )
-                            if b is not None:
-                                blooms[c] = b
-                        if blooms:
-                            entry["blooms"] = blooms
-                except Exception:
-                    pass  # blooms are an optimization, like stats
             out.append(entry)
         return out
 
@@ -803,8 +699,6 @@ class ParquetTable:
             manifest["maintenance"] = True
         if schema:
             manifest["schema"] = schema
-        if self.bloom_columns:
-            manifest["bloom_columns"] = self.bloom_columns
         target = self._manifest_path(version)
         try:
             # O_EXCL: exactly one writer wins version N+1
@@ -949,7 +843,10 @@ class ParquetTable:
         (``filters`` None prunes nothing). ``rewrite`` maps the
         touched files' rows to the rows replacing them. With no file
         touched, ``insert`` is written instead, or, when it is None,
-        nothing commits and the parent version is returned."""
+        nothing commits and the parent version is returned. A version-0
+        bootstrap whose written files hold no row commits without
+        ``batch_id``, so the id stays free for the batch that brings
+        rows."""
         m = self.manifest(parent)
         carried: list[dict] = []  # whole manifests, never opened
         untouched: list[dict] = []  # entries from opened manifests
@@ -975,7 +872,10 @@ class ParquetTable:
         rel = self._write_data_dir(out)
         if untouched:
             carried.append(self._write_manifest(untouched))
-        carried.append(self._write_manifest(self._stats_for_dir(rel)))
+        written = self._stats_for_dir(rel)
+        if parent == 0 and all(e.get("rows") == 0 for e in written):
+            batch_id = None  # empty bootstrap: no ledger entry
+        carried.append(self._write_manifest(written))
         return self._commit(carried, batch_id, parent, schema=schema)
 
     def merge(
@@ -1009,7 +909,10 @@ class ParquetTable:
         applies. The row count rides the key-bounds aggregation, so
         the rule costs no extra Spark job. Exception: at version 0 a
         zero-row batch still commits, which bootstraps a readable,
-        empty table with the batch's schema."""
+        empty table with the batch's schema. That commit carries no
+        ``batch_id`` (the written files' footer counts say it holds no
+        row), so a later non-empty batch reusing the id still
+        applies."""
         parent = self.current_version()
         if self._already_applied(batch_id, parent):
             return parent
@@ -1045,53 +948,35 @@ class ParquetTable:
             parent, key_filters, upsert, batch_id, schema_json, insert=batch
         )
 
+    def _retry(self, write: Callable[[], int]) -> int:
+        """Optimistic-concurrency loop: a loser of the version race
+        re-reads the NEW snapshot and retries (its failed attempt wrote
+        nothing visible), so an out-of-band maintenance commit
+        (compaction) cannot kill a streaming caller. Bounded attempts —
+        a hot table needs a coordinator, not unbounded spinning."""
+        for attempt in range(_COMMIT_ATTEMPTS):
+            try:
+                return write()
+            except CommitConflict:
+                if attempt == _COMMIT_ATTEMPTS - 1:
+                    raise
+        raise AssertionError("unreachable")
+
     def merge_with_retry(
         self,
         batch: DataFrame,
         keys: Sequence[str],
         order_by: Sequence[str],
         batch_id: int | None = None,
-        max_attempts: int = 5,
     ) -> int:
-        """Optimistic-concurrency loop around :meth:`merge`: a loser
-        of the version race re-reads the NEW snapshot and retries (its
-        failed attempt wrote nothing visible). Bounded attempts — a
-        hot table needs a coordinator, not unbounded spinning."""
-        for attempt in range(max_attempts):
-            try:
-                return self.merge(batch, keys, order_by, batch_id=batch_id)
-            except CommitConflict:
-                if attempt == max_attempts - 1:
-                    raise
-        raise AssertionError("unreachable")
+        """:meth:`merge` under the :meth:`_retry` loop."""
+        return self._retry(lambda: self.merge(batch, keys, order_by, batch_id=batch_id))
 
     def delete_where_with_retry(
-        self,
-        filters: Sequence[tuple],
-        batch_id: int | None = None,
-        max_attempts: int = 5,
+        self, filters: Sequence[tuple], batch_id: int | None = None
     ) -> int:
-        """Optimistic-concurrency loop around :meth:`delete_where` —
-        the same contract :meth:`merge_with_retry` gives merges: an
-        out-of-band maintenance commit (compaction) must not kill a
-        streaming caller; a loser of the version race re-reads the
-        new snapshot and retries."""
-        for attempt in range(max_attempts):
-            try:
-                return self.delete_where(filters, batch_id=batch_id)
-            except CommitConflict:
-                if attempt == max_attempts - 1:
-                    raise
-        raise AssertionError("unreachable")
-
-    def merge_writer(self, keys: Sequence[str], order_by: Sequence[str]):
-        """``foreachBatch`` handler: exactly-once keyed MERGE per
-        micro-batch (idempotent under replay via batch_id)."""
-
-        def handle(batch: DataFrame, batch_id: int) -> None:
-            self.merge_with_retry(batch, keys, order_by, batch_id=batch_id)
-
-        return handle
+        """:meth:`delete_where` under the :meth:`_retry` loop."""
+        return self._retry(lambda: self.delete_where(filters, batch_id=batch_id))
 
     def delete_where(
         self, filters: Sequence[tuple], batch_id: int | None = None
@@ -1334,62 +1219,10 @@ class ParquetTable:
         format exists to avoid)."""
         return [os.path.join(self.path, e["path"]) for e in self.files(version)]
 
-    def _zvalue(self, df: DataFrame, cols: Sequence[str], bits: int = 16):
-        """Interleaved-bit Z-value over numeric columns: each column
-        is equal-width-bucketed into 2^bits cells between its global
-        min/max (one small agg), then the bucket bits interleave so a
-        sort on the z-value clusters ALL the columns at once — the
-        multi-column analog of a range sort, same lever as Delta
-        OPTIMIZE ZORDER BY. Pure column expressions; nulls map to
-        bucket 0."""
-        aggs = []
-        for c in cols:
-            aggs += [
-                F.min(F.col(c).cast("double")).alias(f"_lo_{c}"),
-                F.max(F.col(c).cast("double")).alias(f"_hi_{c}"),
-            ]
-        row = df.agg(*aggs).collect()[0]
-        n = len(cols)
-        nb = 1 << bits
-        parts = []
-        for i, c in enumerate(cols):
-            lo, hi = row[f"_lo_{c}"], row[f"_hi_{c}"]
-            if lo is None or hi is None or hi <= lo:
-                bucket = F.lit(0).cast("long")
-            else:
-                bucket = (
-                    F.least(
-                        F.greatest(
-                            F.width_bucket(
-                                F.col(c).cast("double"),
-                                F.lit(float(lo)),
-                                F.lit(float(hi)),
-                                F.lit(nb),
-                            )
-                            - 1,
-                            F.lit(0),
-                        ),
-                        F.lit(nb - 1),
-                    )
-                    .cast("long")
-                )
-                bucket = F.coalesce(bucket, F.lit(0).cast("long"))
-            for k in range(bits):
-                parts.append(
-                    F.shiftleft(
-                        F.shiftright(bucket, k).bitwiseAND(F.lit(1)), k * n + i
-                    )
-                )
-        z = parts[0]
-        for p in parts[1:]:
-            z = z.bitwiseOR(p)
-        return z
-
     def compact(
         self,
         target_file_bytes: int = 128 * 1024 * 1024,
         sort_by: Sequence[str] | None = None,
-        zorder_by: Sequence[str] | None = None,
         min_files: int = 2,
     ) -> int:
         """Rewrite the live file set into ~``target_file_bytes`` files
@@ -1405,12 +1238,7 @@ class ParquetTable:
           (repartitionByRange + sortWithinPartitions), so parquet
           min/max footers AND manifest stats become selective —
           readers with predicates on the sort key skip whole files.
-        - ``zorder_by`` (numeric columns) clusters on an interleaved-
-          bit Z-value instead: every listed column's file bounds
-          tighten simultaneously, so ``read(filters=...)`` prunes on
-          ANY of them — a linear sort only ever serves its leading
-          column.
-        - Without either, the rewrite uses ``coalesce`` — no shuffle,
+        - Without it, the rewrite uses ``coalesce`` — no shuffle,
           just fewer, larger files.
         - Concurrency: the commit targets ``parent+1``; a racing
           append/merge wins or loses atomically (CommitConflict — the
@@ -1421,27 +1249,18 @@ class ParquetTable:
 
         Returns the committed version (``parent`` unchanged when the
         table is already compact)."""
-        if sort_by and zorder_by:
-            raise ValueError("sort_by and zorder_by are mutually exclusive")
         parent = self.current_version()
         entries = self.files(parent)
         if len(entries) < min_files:
             return parent
         total = sum(e.get("bytes", 0) for e in entries)
         n = max(1, -(-total // target_file_bytes))  # ceil
-        if n >= len(entries) and sort_by is None and zorder_by is None:
+        if n >= len(entries) and sort_by is None:
             return parent  # already at-or-below target granularity
         df = self.read(parent)
         if sort_by:
             cols = list(sort_by)
             df = df.repartitionByRange(n, *cols).sortWithinPartitions(*cols)
-        elif zorder_by:
-            df = (
-                df.withColumn("_z", self._zvalue(df, list(zorder_by)))
-                .repartitionByRange(n, "_z")
-                .sortWithinPartitions("_z")
-                .drop("_z")
-            )
         else:
             df = df.coalesce(n)
         rel = self._write_data_dir(df)

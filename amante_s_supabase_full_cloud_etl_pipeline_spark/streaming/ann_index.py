@@ -59,7 +59,7 @@ __all__ = [
 #: past it the probe falls back to a shuffle hash join, because a
 #: million-query batch would blow the broadcast the way an unbounded
 #: IN-list would blow the pruning path (same design as
-#: read_pruned_by_keys' max_in_list (sources/table_format.py)).
+#: read_pruned_by_keys' _MAX_IN_LIST (sources/table_format.py)).
 _MAX_BROADCAST_QUERY_ROWS = 200_000
 
 

@@ -36,7 +36,7 @@ and streaming; the engine only swaps the source/sink.
 from __future__ import annotations
 
 import os
-from collections.abc import Callable, Sequence
+from collections.abc import Callable
 from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
@@ -57,7 +57,7 @@ FACT_KEYS = ("order_id", "items", "payment_time")
 
 
 def pos_table_handler(
-    fact_table, quarantine_table, views: Sequence = ()
+    fact_table, quarantine_table
 ) -> Callable[[DataFrame, int], None]:
     """The ``foreachBatch`` body: kernel → validation split → both
     sinks as :class:`~..sources.table_format.ParquetTable` MERGEs from
@@ -69,13 +69,9 @@ def pos_table_handler(
     ``batch_id`` ledger: a replay after a half-committed batch skips
     the sink that committed and re-applies only the other.
 
-    ``views`` — optional
-    :class:`~..sources.materialized.IncrementalAggView`s over the fact
-    table, refreshed after each commit (the reference fires its ELT
-    stored procedure per load, ref main.py:479; here the aggregate
-    maintains itself from the change feed, and a replayed micro-batch
-    re-refreshes idempotently because the consumed source version
-    rides the view's own commit)."""
+    The caller refreshes views over the fact table, after the drain
+    or after each batch: ``IncrementalAggView.refresh`` is idempotent
+    per source version, so a replayed batch re-refreshes as a no-op."""
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():  # A3 emptiness gate
@@ -94,8 +90,6 @@ def pos_table_handler(
             )
         finally:
             fact.unpersist()
-        for view in views:
-            view.refresh()
 
     return handle
 
@@ -109,8 +103,9 @@ def run_pos_pipeline_transactional(
     archive_dir: Optional[str] = None,
 ):
     """End-to-end streaming ETL, drain-and-exit: every CSV file in the
-    landing dir (the xlsx→landing conversion is sources.xlsx_shim; the
-    engine standardizes on CSV/parquet landing, SURVEY.md S3) → kernel
+    landing dir (the xlsx→landing conversion is
+    ``sources.landing.xlsx_to_landing_csv``; the engine standardizes
+    on CSV/parquet landing, SURVEY.md S3) → kernel
     → validation split → MERGE into the fact and quarantine tables
     (see module notes on delivery semantics). ``archive_dir`` moves
     consumed files there (the S9 marker). Returns the StreamingQuery

@@ -729,8 +729,8 @@ def pagerank_throughput(spark, sf_dir: str) -> tuple[float, float]:
 def synthetic_pos_raw(spark, n_orders: int = 1_000_000):
     """The bench's synthetic n-order POS input, built by cycling the
     fixture's product grammar — ONE definition shared by the timed
-    pass (:func:`pos_kernel_throughput`) and the plan dump
-    (``tools/dump_plans.py``), so PLANS.md records exactly the frame
+    pass (:func:`pos_kernel_throughput`) and the plan dumps
+    (:func:`full_call_frame`), so PLANS.md records exactly the frame
     the bench times."""
     from pyspark.sql import functions as F
 
@@ -750,6 +750,37 @@ def synthetic_pos_raw(spark, n_orders: int = 1_000_000):
         .cast("string")
         .alias("Payment time"),
     )
+
+
+#: bench rows timed as full calls; :func:`full_call_frame` gives the
+#: frame a plan dump records for each
+FULL_CALL_ROWS = ("pagerank_crawl_graph", "pos_kernel_1m_orders")
+
+
+def full_call_frame(spark, sf_dir: str, name: str):
+    """The hot frame of a FULL-CALL bench row, which has no registry
+    frame to dump — ONE definition for ``tools/dump_plans.py`` and
+    ``tools/explain_one.py``. ``pagerank_crawl_graph``: one
+    steady-state iteration body over :func:`pagerank_throughput`'s
+    graph (each iteration's checkpoint truncates lineage, so the loop
+    result's plan is only a vector scan). ``pos_kernel_1m_orders``:
+    the POS kernel over :func:`synthetic_pos_raw`."""
+    if name == "pagerank_crawl_graph":
+        from amante_s_supabase_full_cloud_etl_pipeline_spark import catalog
+        from amante_s_supabase_full_cloud_etl_pipeline_spark.operators.pagerank import (
+            pagerank_iteration_plan,
+            synthetic_link_graph,
+        )
+
+        n_nodes = catalog.table(spark, sf_dir, "documents").count() * 10
+        return pagerank_iteration_plan(synthetic_link_graph(spark, n_nodes, n_nodes * 10))
+    if name == "pos_kernel_1m_orders":
+        from amante_s_supabase_full_cloud_etl_pipeline_spark.plans.pos_kernel import (
+            transform_pos,
+        )
+
+        return transform_pos(synthetic_pos_raw(spark), spark)
+    raise KeyError(f"{name!r} is not a full-call bench row {FULL_CALL_ROWS}")
 
 
 def pos_kernel_throughput(spark, n_orders: int = 1_000_000) -> tuple[float, float]:

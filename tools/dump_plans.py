@@ -18,7 +18,7 @@ sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), ".."
 from amante_s_supabase_full_cloud_etl_pipeline_spark import registry
 from amante_s_supabase_full_cloud_etl_pipeline_spark.session import get_spark
 
-from bench import HEADLINE, query_fn
+from bench import HEADLINE, full_call_frame, query_fn
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 OUT = os.path.join(os.path.dirname(os.path.abspath(__file__)), "..", "PLANS.md")
@@ -99,23 +99,9 @@ def main() -> None:
 def _full_call_frames(spark):
     """(name, frame, note) for the bench rows timed as full calls
     (VERDICT r9 #4: PLANS covered 23/25)."""
-    from amante_s_supabase_full_cloud_etl_pipeline_spark import catalog
-    from amante_s_supabase_full_cloud_etl_pipeline_spark.operators.pagerank import (
-        pagerank_iteration_plan,
-        synthetic_link_graph,
-    )
-    from amante_s_supabase_full_cloud_etl_pipeline_spark.plans.pos_kernel import (
-        transform_pos,
-    )
-
-    from bench import synthetic_pos_raw
-
-    n_nodes = catalog.table(spark, SF_DIR, "documents").count() * 10
-    edges = synthetic_link_graph(spark, n_nodes, n_nodes * 10)
-    it = pagerank_iteration_plan(edges)
     yield (
         "pagerank_crawl_graph",
-        it,
+        full_call_frame(spark, SF_DIR, "pagerank_crawl_graph"),
         "ONE steady-state iteration body (the bench times 4 of these "
         "plus setup as a full call; each iteration's checkpoint "
         "truncates lineage, so the loop RESULT's plan is just a "
@@ -127,7 +113,7 @@ def _full_call_frames(spark):
 
     yield (
         "pos_kernel_1m_orders",
-        transform_pos(synthetic_pos_raw(spark), spark),
+        full_call_frame(spark, SF_DIR, "pos_kernel_1m_orders"),
         "The full POS transform kernel over the bench's synthetic "
         "1M-order input (bench.py pos_kernel_throughput's exact "
         "frame — one shared builder).",

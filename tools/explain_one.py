@@ -41,26 +41,9 @@ def main() -> None:
         )
 
         release_tracked()
-        if name == "pagerank_crawl_graph":
-            # the bench row is an iterative full call whose checkpoints
-            # truncate lineage — dump the steady-state iteration body,
-            # the same artifact PLANS.md records
-            from amante_s_supabase_full_cloud_etl_pipeline_spark import catalog
-            from amante_s_supabase_full_cloud_etl_pipeline_spark.operators.pagerank import (
-                pagerank_iteration_plan,
-                synthetic_link_graph,
-            )
-
-            n_nodes = catalog.table(spark, sf_dir, "documents").count() * 10
-            df = pagerank_iteration_plan(
-                synthetic_link_graph(spark, n_nodes, n_nodes * 10)
-            )
-        elif name == "pos_kernel_1m_orders":
-            from amante_s_supabase_full_cloud_etl_pipeline_spark.plans.pos_kernel import (
-                transform_pos,
-            )
-
-            df = transform_pos(bench.synthetic_pos_raw(spark), spark)
+        if name in bench.FULL_CALL_ROWS:
+            # the same frame PLANS.md records for a full-call row
+            df = bench.full_call_frame(spark, sf_dir, name)
         else:
             df = bench.query_fn(name)(spark, sf_dir)
             if callable(df):
